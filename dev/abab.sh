@@ -1,7 +1,9 @@
 #!/bin/bash
 # Paired ABAB adjudication (round-15 method, kept for round 16): run the
 # SAME query subset alternately from the HEAD worktree (A) and the working
-# tree (B), twice each (A1 B1 A2 B2), and take the per-query MIN per side.
+# tree (B), twice each in order-balanced pairs (A1 B1, then B2 A2: even
+# rounds swap the order, so neither side always runs first on a warmer
+# box), and take the per-query MIN per side.
 # Subset timings are not comparable to full-sweep numbers (less warm-up
 # context), but A and B inside one ABAB block see the same box, so the
 # ratio is decision-grade. Usage:
@@ -12,7 +14,8 @@ export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 export SPARK_GRAFT_ONLY="$QUERIES"
 for round in 1 2; do
-  for side in A B; do
+  order=$([ $((round % 2)) -eq 0 ] && echo "B A" || echo "A B")
+  for side in $order; do
     dir=$([ "$side" = A ] && echo "$HEAD_DIR" || echo /root/repo)
     log="/tmp/abab.$TAG.$side$round.log"
     echo "[abab] $side$round in $dir -> $log"

@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,52 +113,91 @@ object CurationRun {
     * Staging order matters: the confirmed-pair frame goes first, so even
     * the component-staging write (q141) opens on the staged pair scan —
     * one pair derivation for the whole DAG instead of two (q141 + q280).
+    *
+    * STAGE OVERLAP: the winnowing pair write (q216) and the training-shard
+    * write (q192) read none of the three reuse confs — CurationRunSpec pins
+    * that their optimized plans are identical with the confs set and unset
+    * — so they run on a two-thread pool while this thread runs the
+    * conf-dependent chain (near-dup pairs → conf → q141 components). Both
+    * branches are joined before `ComponentConf`/`PairConf` are set, and a
+    * branch failure is rethrown. The pool is created here, per call: its
+    * threads are spawned by this thread and so inherit its Spark local
+    * properties (job group, scheduler pool, caller tags). The `finally`
+    * covers pool creation: it waits for both branches to finish (their
+    * jobs never outlive the call), then restores the confs.
     */
   def run(spark: SparkSession, dir: String): DataFrame = {
     val (compPath, pairPath) = stagedPaths(dir)
     val ndPairPath = stagedNearDupPairPath(dir)
-    SimilarityQueries.derivedNearDupPairs(spark, dir)
-      .write.mode("overwrite").parquet(ndPairPath)
     val prevNd = spark.conf.getOption(NearDupPairConf)
-    spark.conf.set(NearDupPairConf, ndPairPath)
     val prevComp = spark.conf.getOption(ComponentConf)
     val prevPair = spark.conf.getOption(PairConf)
     try {
-      GraphQueries.q141NearDupComponents(spark, dir)
-        .write.mode("overwrite").parquet(compPath)
-      SimilarityQueries.q216WinnowingFingerprints(spark, dir)
-        .write.mode("overwrite").parquet(pairPath)
-      spark.conf.set(ComponentConf, compPath)
-      spark.conf.set(PairConf, pairPath)
-      val stages = Seq(
-        ("components", spark.read.parquet(compPath), ComponentsChk),
-        ("dedup_map", GraphQueries.q269DedupMap(spark, dir), DedupMapChk),
-        ("folds", MiningQueries.q184DedupAwareFolds(spark, dir), FoldsChk),
-        ("winnow_pairs", spark.read.parquet(pairPath), PairsChk),
-        ("weighted_jaccard",
-          SimilarityQueries.q236WeightedJaccard(spark, dir), WjChk),
-        ("cluster_cohesion",
-          GraphQueries.q280ClusterCohesion(spark, dir), CohesionChk),
-        ("effective_corpus",
-          CurationQueries.q284EffectiveCorpus(spark, dir), CorpusChk),
-        ("shards", TextQueries.q192TrainingShards(spark, dir), ShardsChkSpark))
-      stages.map { case (s, df, chk) => summarize(s, df, chk) }
-        .reduce(_ unionByName _)
-        .orderBy(col("stage"))
+      val pool = Executors.newFixedThreadPool(2, OverlapThreads)
+      try {
+        def branch[A](f: => A): Future[A] =
+          pool.submit(new Callable[A] { def call(): A = f })
+        val pairsWritten = branch(SimilarityQueries
+          .q216WinnowingFingerprints(spark, dir)
+          .write.mode("overwrite").parquet(pairPath))
+        val shards = branch(TextQueries.q192TrainingShards(spark, dir))
+        SimilarityQueries.derivedNearDupPairs(spark, dir)
+          .write.mode("overwrite").parquet(ndPairPath)
+        spark.conf.set(NearDupPairConf, ndPairPath)
+        GraphQueries.q141NearDupComponents(spark, dir)
+          .write.mode("overwrite").parquet(compPath)
+        join(pairsWritten)
+        val shardsDf = join(shards)
+        spark.conf.set(ComponentConf, compPath)
+        spark.conf.set(PairConf, pairPath)
+        val stages = Seq(
+          ("components", spark.read.parquet(compPath), ComponentsChk),
+          ("dedup_map", GraphQueries.q269DedupMap(spark, dir), DedupMapChk),
+          ("folds", MiningQueries.q184DedupAwareFolds(spark, dir), FoldsChk),
+          ("winnow_pairs", spark.read.parquet(pairPath), PairsChk),
+          ("weighted_jaccard",
+            SimilarityQueries.q236WeightedJaccard(spark, dir), WjChk),
+          ("cluster_cohesion",
+            GraphQueries.q280ClusterCohesion(spark, dir), CohesionChk),
+          ("effective_corpus",
+            CurationQueries.q284EffectiveCorpus(spark, dir), CorpusChk),
+          ("shards", shardsDf, ShardsChkSpark))
+        stages.map { case (s, df, chk) => summarize(s, df, chk) }
+          .reduce(_ unionByName _)
+          .orderBy(col("stage"))
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
     } finally {
-      prevComp match {
-        case Some(v) => spark.conf.set(ComponentConf, v)
-        case None => spark.conf.unset(ComponentConf)
-      }
-      prevPair match {
-        case Some(v) => spark.conf.set(PairConf, v)
-        case None => spark.conf.unset(PairConf)
-      }
-      prevNd match {
-        case Some(v) => spark.conf.set(NearDupPairConf, v)
-        case None => spark.conf.unset(NearDupPairConf)
-      }
+      restore(spark, ComponentConf, prevComp)
+      restore(spark, PairConf, prevPair)
+      restore(spark, NearDupPairConf, prevNd)
     }
+  }
+
+  /** Name prefix of [[run]]'s overlap threads (the spec checks none
+    * outlives the call). */
+  private[graft] val OverlapThreadPrefix = "curation-run-overlap-"
+
+  private object OverlapThreads extends ThreadFactory {
+    private val n = new AtomicInteger()
+    def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, OverlapThreadPrefix + n.incrementAndGet())
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** A branch's value, or its own failure (not the ExecutionException
+    * wrapper). */
+  private def join[A](f: Future[A]): A =
+    try f.get() catch { case e: ExecutionException => throw e.getCause }
+
+  private[pipeline] def restore(spark: SparkSession, key: String,
+      prev: Option[String]): Unit = prev match {
+    case Some(v) => spark.conf.set(key, v)
+    case None => spark.conf.unset(key)
   }
 
   /** Gate mode: the identical summary with every stage re-derived from the

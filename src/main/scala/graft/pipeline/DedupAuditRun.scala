@@ -85,14 +85,8 @@ object DedupAuditRun {
       spark.conf.set(CurationRun.ComponentConf, compPath)
       summary(spark, dir)
     } finally {
-      prevNd match {
-        case Some(v) => spark.conf.set(CurationRun.NearDupPairConf, v)
-        case None => spark.conf.unset(CurationRun.NearDupPairConf)
-      }
-      prevComp match {
-        case Some(v) => spark.conf.set(CurationRun.ComponentConf, v)
-        case None => spark.conf.unset(CurationRun.ComponentConf)
-      }
+      CurationRun.restore(spark, CurationRun.NearDupPairConf, prevNd)
+      CurationRun.restore(spark, CurationRun.ComponentConf, prevComp)
     }
   }
 

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.CurationRun
-import graft.queries.{GraphQueries, SimilarityQueries}
+import graft.queries.{GraphQueries, SimilarityQueries, TextQueries}
 
 /** The composed-pipeline contract (q270): persisted-intermediate execution
   * must be RESULT-IDENTICAL to gate mode, and must genuinely read the
@@ -89,6 +90,55 @@ class CurationRunSpec extends AnyFunSuite with SparkSpec {
       assert(GraphQueries.q325DegreeAssortativity(spark, sfDir)
         .collect().toSeq === assortGate)
     } finally spark.conf.unset(CurationRun.NearDupPairConf)
+  }
+
+  private val reuseConfs = Seq(CurationRun.NearDupPairConf,
+    CurationRun.ComponentConf, CurationRun.PairConf)
+
+  test("q270 overlap safety: q216 and q192 build identical optimized plans " +
+    "with the three reuse confs set and unset") {
+    // q192 writes its shards while it builds its frame: pin that write's
+    // input as well as the frame it returns. Plans compare as canonical
+    // text without object identities (the shard input's mapPartitions
+    // closure is a new object per build), plus the directories each one
+    // scans (each shard write names its part files afresh).
+    def plans() = Seq(
+      SimilarityQueries.q216WinnowingFingerprints(spark, sfDir),
+      TextQueries.shardAssignment(spark, sfDir),
+      TextQueries.q192TrainingShards(spark, sfDir))
+      .map(df => (df.queryExecution.optimizedPlan.canonicalized.toString
+        .replaceAll("@[0-9a-f]+", ""),
+        df.inputFiles.map(f => f.take(f.lastIndexOf('/'))).distinct.sorted.toSeq))
+    val unset = plans()
+    // a one-row table per conf: a query that consulted one would scan it
+    val root = java.nio.file.Files.createTempDirectory("curation-confs")
+    reuseConfs.zipWithIndex.foreach { case (k, i) =>
+      val p = root.resolve(s"t$i").toString
+      spark.range(1).write.parquet(p)
+      spark.conf.set(k, p)
+    }
+    try {
+      val set = plans()
+      unset.zip(set).foreach { case (u, s) => assert(u == s, s"unset:\n$u\nset:\n$s") }
+    } finally reuseConfs.foreach(spark.conf.unset)
+  }
+
+  test("q270: a failing run rethrows, leaves the reuse confs as on entry " +
+    "and leaves no live overlap thread") {
+    val missing = java.nio.file.Files.createTempDirectory("curation-missing")
+      .resolve("absent").toString
+    spark.conf.set(CurationRun.NearDupPairConf, "/entry/pairs")
+    spark.conf.set(CurationRun.ComponentConf, "/entry/components")
+    try {
+      intercept[Exception](CurationRun.run(spark, missing))
+      assert(reuseConfs.map(spark.conf.getOption) ===
+        Seq(Some("/entry/pairs"), Some("/entry/components"), None))
+      val live = Thread.getAllStackTraces.keySet.asScala.filter(
+        _.getName.startsWith(CurationRun.OverlapThreadPrefix))
+      // a terminated pool's workers return from run() right after
+      live.foreach(_.join(5000))
+      assert(!live.exists(_.isAlive), s"overlap threads still alive: $live")
+    } finally reuseConfs.foreach(spark.conf.unset)
   }
 
   test("q270: gateSummary refuses to run half-composed") {

@@ -12,6 +12,16 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** The final adaptive plan after running the query (stage reuse only
+    * shows there), without the initial plan AQE appends. */
+  private def executedFinalPlan(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    val cut = p.indexOf("== Initial Plan ==")
+    if (cut >= 0) p.take(cut) else p
+  }
+
   test("q01 pushes the shipdate filter into the parquet scan and prunes columns") {
     val p = plan("q01_agg_pricing")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p)
@@ -127,11 +137,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // isnotnull(doc_id) keeps all consumer subtrees identical, so the
     // EXECUTED plan must collapse them to a single documents FileScan
     // with the explode's exchange reused everywhere else
-    val df = SparkEntry.queries("q144_bm25_search")(spark, sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val cut = p.indexOf("== Initial Plan ==")
-    val finalPlan = if (cut >= 0) p.take(cut) else p
+    val finalPlan = executedFinalPlan("q144_bm25_search")
     val scans = "FileScan parquet".r.findAllIn(finalPlan).size
     assert(scans === 1,
       s"q144 must read documents.parquet exactly once, found $scans scans:\n${finalPlan.take(6000)}")
@@ -306,13 +312,18 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("q216: the fingerprint explode runs once — document frequency and " +
+    "per-doc counts are windows on one chain, and the self-join reuses " +
+    "its fp exchange") {
+    val finalPlan = executedFinalPlan("q216_winnowing_fingerprints")
+    assert("Generate explode".r.findAllIn(finalPlan).size == 1,
+      s"fingerprint subtree evaluated more than once:\n${finalPlan.take(6000)}")
+    assert(finalPlan.contains("ReusedExchange"), finalPlan.take(6000))
+  }
+
   test("q239: unrolled TextRank reuses the edge/degree exchanges across " +
     "iterations (q142's discipline on the word graph)") {
-    val df = SparkEntry.queries("q239_textrank_keywords")(spark, sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val cut = p.indexOf("== Initial Plan ==")
-    val finalPlan = if (cut >= 0) p.take(cut) else p
+    val finalPlan = executedFinalPlan("q239_textrank_keywords")
     assert(finalPlan.contains("ReusedExchange"),
       s"TextRank must reuse exchanges:\n${finalPlan.take(4000)}")
   }
