@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark harness (driver contract): runs every registered
   * query at SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query and
@@ -331,16 +330,7 @@ object Bench {
     // overwrite bench.json (their total is not a round total).
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // tz-naive testdata timestamps must read as TIMESTAMP, not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSessionFactory.build(master = s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
 
     def run(df: org.apache.spark.sql.DataFrame): Unit =

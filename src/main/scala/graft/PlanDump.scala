@@ -1,13 +1,19 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: dump formatted physical plans for a representative query set
-  * to PLANS.md — the evidence backing ARCHITECTURE.md's claims (pushdown,
-  * pruning, broadcast, no-sort custom operator). Run:
-  * `sbt "runMain graft.PlanDump"`.
+/** Dev tool with two modes.
+  *
+  *  - `sbt "runMain graft.PlanDump [sfDir]"`: dump physical plans for a
+  *    representative query set to PLANS.md — the evidence backing
+  *    ARCHITECTURE.md's claims (pushdown, pruning, broadcast, no-sort
+  *    custom operator).
+  *  - `sbt "runMain graft.PlanDump <sfDir> <q1,q2,...> <outDir>"`: write
+  *    each named query's `.explain("formatted")` to `<outDir>/<name>.txt`,
+  *    the before/after plan evidence of an optimization (put the
+  *    before/after tag in `outDir`).
   */
 object PlanDump {
   private val Showcase = Seq(
@@ -49,18 +55,33 @@ object PlanDump {
     "q174_random_projection" -> "JL projection: 16 static signed sums in one codegen'd projection — no shuffle before the presentation sort")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // tz-naive testdata timestamps must read as TIMESTAMP, not NTZ
-      // (same setting as SparkSessionFactory/Verify/Bench)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length <= 1 || args.length == 3,
+      "usage: PlanDump [sfDir] | PlanDump <sfDir> <q1,q2,...> <outDir>")
+    val spark = SparkSessionFactory.build(master = "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    args match {
+      case Array(_, names, outDir) =>
+        writeFormatted(spark, sfDir, names.split(',').map(_.trim).filter(_.nonEmpty).toSeq,
+          Paths.get(outDir))
+      case _ => writePlansMd(spark, sfDir)
+    }
+    spark.stop()
+  }
+
+  private def writeFormatted(spark: SparkSession, sfDir: String, names: Seq[String],
+      outDir: Path): Unit = {
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      val txt = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      val out = outDir.resolve(s"$name.txt")
+      Files.writeString(out, txt)
+      println(s"wrote $out")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (generated by graft.PlanDump)\n\n")
     sb.append(s"Input: `$sfDir`. Regenerate with `sbt \"runMain graft.PlanDump\"`.\n")
@@ -85,7 +106,6 @@ object PlanDump {
     sb.append("\n").append(manual)
     Files.writeString(out, sb.toString)
     println(s"wrote PLANS.md (${Showcase.size} plans; manual tail preserved)")
-    spark.stop()
   }
 
   /** Everything at/after this line in PLANS.md survives regeneration. */

@@ -3,48 +3,46 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its name, how to build it over an input dir, and
+  * its oracle, the DuckDB-equivalent ANSI SQL over the same parquet tables
+  * that its result is compared against. */
+final case class QuerySpec(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: String)
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every implemented operator from SURVEY.md §2 registers a named query here;
-  * `oracleSql` carries the DuckDB-equivalent ANSI SQL for the driver's
-  * hash-compare at sf0.01 (omitted only for non-SQL-expressible ops, which
-  * get scalatest invariants instead).
+  * Every implemented operator from SURVEY.md §2 registers one [[QuerySpec]]
+  * in its module's `specs`; `queries` and `oracleSql` are views of that one
+  * list, so a query and its oracle cannot drift apart.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q01Pricing(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.registry ++ Windows.registry ++ Scalars.registry ++
-      EtlQueries.registry ++ TextQueries.registry ++
-      SimilarityQueries.registry ++ StreamingQueries.registry ++
-      ExtensionQueries.registry ++ SurfaceQueries.registry ++
-      AdvancedQueries.registry ++ ApiSurfaceQueries.registry ++
-      ScaleQueries.registry ++ CurationQueries.registry ++
-      RelationalPlus.registry ++ GraphQueries.registry ++
-      RetrievalQueries.registry ++ MiningQueries.registry ++
-      CorpusQueries.registry ++ EvalQueries.registry ++
-      TimeSeriesQueries.registry ++ EmbeddingQueries.registry ++
-      ProfilingQueries.registry ++ graft.pipeline.CurationRun.registry ++
-      graft.pipeline.RetrievalRun.registry ++
-      graft.pipeline.DedupAuditRun.registry
+  /** Every module's specs, in module order. */
+  lazy val specs: Seq[QuerySpec] =
+    Relational.specs ++ Windows.specs ++ Scalars.specs ++
+      EtlQueries.specs ++ TextQueries.specs ++
+      SimilarityQueries.specs ++ StreamingQueries.specs ++
+      ExtensionQueries.specs ++ SurfaceQueries.specs ++
+      AdvancedQueries.specs ++ ApiSurfaceQueries.specs ++
+      ScaleQueries.specs ++ CurationQueries.specs ++
+      RelationalPlus.specs ++ GraphQueries.specs ++
+      RetrievalQueries.specs ++ MiningQueries.specs ++
+      CorpusQueries.specs ++ EvalQueries.specs ++
+      TimeSeriesQueries.specs ++ EmbeddingQueries.specs ++
+      ProfilingQueries.specs ++ graft.pipeline.CurationRun.specs ++
+      graft.pipeline.RetrievalRun.specs ++
+      graft.pipeline.DedupAuditRun.specs
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Windows.oracles ++ Scalars.oracles ++
-      EtlQueries.oracles ++ TextQueries.oracles ++
-      SimilarityQueries.oracles ++ StreamingQueries.oracles ++
-      ExtensionQueries.oracles ++ SurfaceQueries.oracles ++
-      AdvancedQueries.oracles ++ ApiSurfaceQueries.oracles ++
-      ScaleQueries.oracles ++ CurationQueries.oracles ++
-      RelationalPlus.oracles ++ GraphQueries.oracles ++
-      RetrievalQueries.oracles ++ MiningQueries.oracles ++
-      CorpusQueries.oracles ++ EvalQueries.oracles ++
-      TimeSeriesQueries.oracles ++ EmbeddingQueries.oracles ++
-      ProfilingQueries.oracles ++ graft.pipeline.CurationRun.oracles ++
-      graft.pipeline.RetrievalRun.oracles ++
-      graft.pipeline.DedupAuditRun.oracles
+  /** Query name → builder over an input dir. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.run).toMap
+
+  /** Query name → oracle SQL, runnable by DuckDB on the same tables. */
+  lazy val oracleSql: Map[String, String] =
+    specs.map(s => s.name -> s.oracle).toMap
 }

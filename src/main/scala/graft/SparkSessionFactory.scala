@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Session factory ≙ reference `get_spark_session(app_name, config_options,
   * jars, packages)` (`lambda_function.py:54-80`), Spark-4 idiomatic: scale
   * defaults (AQE, UTC, sized shuffle partitions) applied first, caller
-  * config layered on top.
+  * config layered on top. The only session builder in the repo: Bench,
+  * Verify, PlanDump, the test suite and perfbench all call [[build]], so
+  * the sessions that are verified and benched share one configuration.
   */
 object SparkSessionFactory {
 

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.queries.{CurationQueries, GraphQueries, MiningQueries, SimilarityQueries, TextQueries}
 
 /** END-TO-END CURATION RUN (q270) — the composed production pipeline over
@@ -254,9 +255,6 @@ object CurationRun {
       .mkString("", "\nUNION ALL\n", "\nORDER BY stage")
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q270_curation_run" -> ((s, d) => run(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "q270_curation_run" -> q270Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q270_curation_run", run, q270Oracle))
 }

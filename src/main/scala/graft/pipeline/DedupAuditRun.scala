@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.queries.{GraphQueries, SimilarityQueries}
 
 /** COMPOSED DEDUP-GOVERNANCE RUN (q350) — the round-13 composition seam
@@ -116,9 +117,6 @@ object DedupAuditRun {
       .mkString("", "\nUNION ALL\n", "\nORDER BY stage")
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q350_dedup_audit_run" -> ((s, d) => run(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "q350_dedup_audit_run" -> q350Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q350_dedup_audit_run", run, q350Oracle))
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.queries.{MiningQueries, RetrievalQueries}
 
 /** END-TO-END RETRIEVAL RUN (q309) — the postings-persistence posture
@@ -133,9 +134,6 @@ object RetrievalRun {
       .mkString("", "\nUNION ALL\n", "\nORDER BY stage")
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q309_retrieval_run" -> ((s, d) => run(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "q309_retrieval_run" -> q309Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q309_retrieval_run", run, q309Oracle))
 }

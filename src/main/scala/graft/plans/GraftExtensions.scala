@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
 /** Library-grade Catalyst registration (the guide's preferred path over
-  * `experimental.extraStrategies`): install via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or the
+  * `experimental.extraStrategies`): [[graft.SparkSessionFactory]] installs
+  * it with `withExtensions(new GraftExtensions)`; elsewhere use the
   * `spark.sql.extensions=graft.plans.GraftExtensions` conf. Injects
   *
   *   - [[GroupTopKStrategy]] — plans [[GroupTopKNode]] as the heap-based

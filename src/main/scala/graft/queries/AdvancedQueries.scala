@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.{Percentiles, PrefixSum, TextFunctions}
 
 /** Advanced relational + text operators: as-of join, exact percentiles,
@@ -1844,77 +1844,40 @@ object AdvancedQueries {
       |FROM f FULL OUTER JOIN l ON l.event_type = f.event_type
       |ORDER BY event_type""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q349_funnel_latency" -> (q349FunnelLatency _),
-    "q343_touch_attribution" -> (q343TouchAttribution _),
-    "q317_growth_decomposition" -> (q317GrowthDecomposition _),
-    "q318_shift_share"      -> (q318ShiftShare _),
-    "q298_attribution"      -> (q298Attribution _),
-    "q257_windowed_funnel"   -> (q257WindowedFunnel _),
-    "q258_transition_latency" -> (q258TransitionLatency _),
-    "q246_rfm_segments"     -> (q246RfmSegments _),
-    "q159_phrase_mining"    -> (q159PhraseMining _),
-    "q157_drift_screen"     -> (q157DriftScreen _),
-    "q156_asof_forward"     -> (q156AsofForward _),
-    "q155_robust_mad"       -> (q155RobustMad _),
-    "q146_skyline"          -> (q146Skyline _),
-    "q128_pareto_abc"       -> (q128ParetoAbc _),
-    "q125_session_funnel"   -> (q125SessionFunnel _),
-    "q124_spike_detect"     -> (q124SpikeDetect _),
-    "q123_cohort_retention" -> (q123CohortRetention _),
-    "q121_weighted_median"  -> (q121WeightedMedian _),
-    "q132_weighted_quartiles" -> (q132WeightedQuartiles _),
-    "q115_resample_interpolate" -> (q115ResampleInterpolate _),
-    "q111_rolling_median"   -> (q111RollingMedian _),
-    "q110_corr_stats"       -> (q110CorrStats _),
-    "q103_decay_features"   -> (q103DecayFeatures _),
-    "q94_hll_sketch_rollup" -> (q94HllSketchRollup _),
-    "q96_funnel"            -> (q96Funnel _),
-    "q69_approx_percentiles" -> (q69ApproxPercentiles _),
-    "q63_train_test_split" -> (q63TrainTestSplit _),
-    "q64_sequence_packing" -> (q64SequencePacking _),
-    "q62_topk_custom_operator" -> (q62TopKCustomOperator _),
-    "q56_asof_join"     -> (q56AsofJoin _),
-    "q57_percentiles"   -> (q57Percentiles _),
-    "q58_histogram"     -> (q58Histogram _),
-    "q59_edit_distance" -> (q59EditDistance _),
-    "q60_tfidf"         -> (q60TfIdf _),
-    "q61_dedup_content_hash" -> (q61DedupContentHash _))
-
-  val oracles: Map[String, String] = Map(
-    "q349_funnel_latency" -> q349Oracle,
-    "q343_touch_attribution" -> q343Oracle,
-    "q317_growth_decomposition" -> q317Oracle,
-    "q318_shift_share"      -> q318Oracle,
-    "q298_attribution"      -> q298Oracle,
-    "q257_windowed_funnel"   -> q257Oracle,
-    "q258_transition_latency" -> q258Oracle,
-    "q246_rfm_segments"     -> q246Oracle,
-    "q159_phrase_mining"    -> q159Oracle,
-    "q157_drift_screen"     -> q157Oracle,
-    "q156_asof_forward"     -> q156Oracle,
-    "q155_robust_mad"       -> q155Oracle,
-    "q146_skyline"          -> q146Oracle,
-    "q128_pareto_abc"       -> q128Oracle,
-    "q125_session_funnel"   -> q125Oracle,
-    "q124_spike_detect"     -> q124Oracle,
-    "q123_cohort_retention" -> q123Oracle,
-    "q121_weighted_median"  -> q121Oracle,
-    "q132_weighted_quartiles" -> q132Oracle,
-    "q115_resample_interpolate" -> q115Oracle,
-    "q111_rolling_median"   -> q111Oracle,
-    "q110_corr_stats"       -> q110Oracle,
-    "q103_decay_features"   -> q103Oracle,
-    "q94_hll_sketch_rollup" -> q94Oracle,
-    "q96_funnel"            -> q96Oracle,
-    "q63_train_test_split" -> q63Oracle,
-    "q64_sequence_packing" -> q64Oracle,
-    "q62_topk_custom_operator" -> q62Oracle,
-    "q56_asof_join"     -> q56Oracle,
-    "q57_percentiles"   -> q57Oracle,
-    "q58_histogram"     -> q58Oracle,
-    "q69_approx_percentiles" -> q69Oracle,
-    "q59_edit_distance" -> q59Oracle,
-    "q60_tfidf"         -> q60Oracle,
-    "q61_dedup_content_hash" -> q61Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q349_funnel_latency", q349FunnelLatency, q349Oracle),
+    QuerySpec("q343_touch_attribution", q343TouchAttribution, q343Oracle),
+    QuerySpec("q317_growth_decomposition", q317GrowthDecomposition, q317Oracle),
+    QuerySpec("q318_shift_share", q318ShiftShare, q318Oracle),
+    QuerySpec("q298_attribution", q298Attribution, q298Oracle),
+    QuerySpec("q257_windowed_funnel", q257WindowedFunnel, q257Oracle),
+    QuerySpec("q258_transition_latency", q258TransitionLatency, q258Oracle),
+    QuerySpec("q246_rfm_segments", q246RfmSegments, q246Oracle),
+    QuerySpec("q159_phrase_mining", q159PhraseMining, q159Oracle),
+    QuerySpec("q157_drift_screen", q157DriftScreen, q157Oracle),
+    QuerySpec("q156_asof_forward", q156AsofForward, q156Oracle),
+    QuerySpec("q155_robust_mad", q155RobustMad, q155Oracle),
+    QuerySpec("q146_skyline", q146Skyline, q146Oracle),
+    QuerySpec("q128_pareto_abc", q128ParetoAbc, q128Oracle),
+    QuerySpec("q125_session_funnel", q125SessionFunnel, q125Oracle),
+    QuerySpec("q124_spike_detect", q124SpikeDetect, q124Oracle),
+    QuerySpec("q123_cohort_retention", q123CohortRetention, q123Oracle),
+    QuerySpec("q121_weighted_median", q121WeightedMedian, q121Oracle),
+    QuerySpec("q132_weighted_quartiles", q132WeightedQuartiles, q132Oracle),
+    QuerySpec("q115_resample_interpolate", q115ResampleInterpolate, q115Oracle),
+    QuerySpec("q111_rolling_median", q111RollingMedian, q111Oracle),
+    QuerySpec("q110_corr_stats", q110CorrStats, q110Oracle),
+    QuerySpec("q103_decay_features", q103DecayFeatures, q103Oracle),
+    QuerySpec("q94_hll_sketch_rollup", q94HllSketchRollup, q94Oracle),
+    QuerySpec("q96_funnel", q96Funnel, q96Oracle),
+    QuerySpec("q69_approx_percentiles", q69ApproxPercentiles, q69Oracle),
+    QuerySpec("q63_train_test_split", q63TrainTestSplit, q63Oracle),
+    QuerySpec("q64_sequence_packing", q64SequencePacking, q64Oracle),
+    QuerySpec("q62_topk_custom_operator", q62TopKCustomOperator, q62Oracle),
+    QuerySpec("q56_asof_join", q56AsofJoin, q56Oracle),
+    QuerySpec("q57_percentiles", q57Percentiles, q57Oracle),
+    QuerySpec("q58_histogram", q58Histogram, q58Oracle),
+    QuerySpec("q59_edit_distance", q59EditDistance, q59Oracle),
+    QuerySpec("q60_tfidf", q60TfIdf, q60Oracle),
+    QuerySpec("q61_dedup_content_hash", q61DedupContentHash, q61Oracle))
 }

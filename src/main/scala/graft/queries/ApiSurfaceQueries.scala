@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Remaining DataFrame/Dataset API surface: pivot, null handling
   * (DataFrameNaFunctions), typed Dataset operations.
@@ -131,15 +131,9 @@ object ApiSurfaceQueries {
       |  COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchase
       |FROM events""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q98_observe_metrics" -> (q98ObserveMetrics _),
-    "q65_pivot"       -> (q65Pivot _),
-    "q66_na_handling" -> (q66NaHandling _),
-    "q67_typed_ops"   -> (q67TypedOps _))
-
-  val oracles: Map[String, String] = Map(
-    "q98_observe_metrics" -> q98Oracle,
-    "q65_pivot"       -> q65Oracle,
-    "q66_na_handling" -> q66Oracle,
-    "q67_typed_ops"   -> q67Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q98_observe_metrics", q98ObserveMetrics, q98Oracle),
+    QuerySpec("q65_pivot", q65Pivot, q65Oracle),
+    QuerySpec("q66_na_handling", q66NaHandling, q66Oracle),
+    QuerySpec("q67_typed_ops", q67TypedOps, q67Oracle))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Corpus-composition operators: the questions a dataset owner asks ABOUT
   * sources before mixing them — how much two ingest feeds overlap, and who
@@ -441,15 +441,9 @@ object CorpusQueries {
        |GROUP BY df.doc_id
        |ORDER BY doc_id""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q202_source_overlap_sketch" -> (q202SourceOverlapSketch _),
-    "q203_cross_source_priority" -> (q203CrossSourcePriority _),
-    "q205_tandem_repeats"        -> (q205TandemRepeats _),
-    "q206_dsir_importance"       -> (q206DsirImportance _))
-
-  val oracles: Map[String, String] = Map(
-    "q202_source_overlap_sketch" -> q202Oracle,
-    "q203_cross_source_priority" -> q203Oracle,
-    "q205_tandem_repeats"        -> q205Oracle,
-    "q206_dsir_importance"       -> q206Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q202_source_overlap_sketch", q202SourceOverlapSketch, q202Oracle),
+    QuerySpec("q203_cross_source_priority", q203CrossSourcePriority, q203Oracle),
+    QuerySpec("q205_tandem_repeats", q205TandemRepeats, q205Oracle),
+    QuerySpec("q206_dsir_importance", q206DsirImportance, q206Oracle))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.{Similarity, TextFunctions}
 
 /** Corpus-curation operators a production training-data pipeline runs
@@ -3132,89 +3132,46 @@ object CurationQueries {
        |FROM rk CROSS JOIN lo
        |ORDER BY source""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q365_temperature_mixture" -> (q365TemperatureMixture _),
-    "q344_erasure_plan" -> (q344ErasurePlan _),
-    "q345_snapshot_diff" -> (q345SnapshotDiff _),
-    "q316_source_novelty"   -> (q316SourceNovelty _),
-    "q320_neyman_allocation" -> (q320NeymanAllocation _),
-    "q305_greedy_coverage"  -> (q305GreedyCoverage _),
-    "q282_eval_blast_radius"    -> (q282EvalBlastRadius _),
-    "q284_effective_corpus"     -> (q284EffectiveCorpus _),
-    "q276_holdout_sample"       -> (q276HoldoutSample _),
-    "q274_top_p_curation"       -> (q274TopPCuration _),
-    "q265_span_corruption"      -> (q265SpanCorruption _),
-    "q233_apportionment"        -> (q233Apportionment _),
-    "q225_policy_regex_filter"  -> (q225PolicyRegexFilter _),
-    "q218_lang_quality_buckets" -> (q218LangQualityBuckets _),
-    "q212_html_extract" -> (q212HtmlExtract _),
-    "q199_duplicate_chunks" -> (q199DuplicateChunks _),
-    "q198_upsample_materialize" -> (q198UpsampleMaterialize _),
-    "q197_url_canonical_dedup" -> (q197UrlCanonicalDedup _),
-    "q194_token_budget_mixture" -> (q194TokenBudgetMixture _),
-    "q193_incremental_domain_curation" -> (q193IncrementalDomainCuration _),
-    "q191_domain_curation" -> (q191DomainCuration _),
-    "q188_subword_decontaminate" -> (q188SubwordDecontaminate _),
-    "q168_curation_pipeline" -> (q168CurationPipeline _),
-    "q164_span_decontaminate" -> (q164SpanDecontaminate _),
-    "q163_creditcard_redact" -> (q163CreditCardRedact _),
-    "q160_classifier_training" -> (q160ClassifierTraining _),
-    "q152_bpe_train"         -> (q152BpeTrain _),
-    "q151_unicode_normalize" -> (q151UnicodeNormalize _),
-    "q136_quality_classifier" -> (q136QualityClassifier _),
-    "q135_doc_fluency"       -> (q135DocFluency _),
-    "q134_corpus_mixture"    -> (q134CorpusMixture _),
-    "q133_contamination"     -> (q133ContaminationCheck _),
-    "q127_sample_per_stratum" -> (q127SamplePerStratum _),
-    "q104_outlier_zscore"    -> (q104OutlierZscore _),
-    "q101_doc_chunking"      -> (q101DocChunking _),
-    "q90_cms_heavy_hitters"  -> (q90CmsHeavyHitters _),
-    "q91_weighted_sample"    -> (q91WeightedSample _),
-    "q78_quality_repetition" -> (q78QualityRepetition _),
-    "q79_pii_redact"         -> (q79PiiRedact _),
-    "q80_stratified_sample"  -> (q80StratifiedSample _),
-    "q82_vec_quantize"       -> (q82VecQuantize _))
-
-  val oracles: Map[String, String] = Map(
-    "q365_temperature_mixture" -> q365Oracle,
-    "q344_erasure_plan" -> q344Oracle,
-    "q345_snapshot_diff" -> q345Oracle,
-    "q316_source_novelty"       -> q316Oracle,
-    "q320_neyman_allocation"    -> q320Oracle,
-    "q305_greedy_coverage"      -> q305Oracle,
-    "q282_eval_blast_radius"    -> q282Oracle,
-    "q284_effective_corpus"     -> q284Oracle,
-    "q276_holdout_sample"       -> q276Oracle,
-    "q274_top_p_curation"       -> q274Oracle,
-    "q265_span_corruption"      -> q265Oracle,
-    "q233_apportionment"        -> q233Oracle,
-    "q225_policy_regex_filter"  -> q225Oracle,
-    "q218_lang_quality_buckets" -> q218Oracle,
-    "q212_html_extract" -> q212Oracle,
-    "q199_duplicate_chunks" -> q199Oracle,
-    "q198_upsample_materialize" -> q198Oracle,
-    "q197_url_canonical_dedup" -> q197Oracle,
-    "q194_token_budget_mixture" -> q194Oracle,
-    "q193_incremental_domain_curation" -> q193Oracle,
-    "q191_domain_curation" -> q191Oracle,
-    "q188_subword_decontaminate" -> q188Oracle,
-    "q168_curation_pipeline" -> q168Oracle,
-    "q164_span_decontaminate" -> q164Oracle,
-    "q163_creditcard_redact" -> q163Oracle,
-    "q160_classifier_training" -> q160Oracle,
-    "q152_bpe_train"         -> q152Oracle,
-    "q151_unicode_normalize" -> q151Oracle,
-    "q136_quality_classifier" -> q136Oracle,
-    "q135_doc_fluency"       -> q135Oracle,
-    "q134_corpus_mixture"    -> q134Oracle,
-    "q133_contamination"     -> q133Oracle,
-    "q127_sample_per_stratum" -> q127Oracle,
-    "q104_outlier_zscore"    -> q104Oracle,
-    "q101_doc_chunking"      -> q101Oracle,
-    "q90_cms_heavy_hitters"  -> q90Oracle,
-    "q91_weighted_sample"    -> q91Oracle,
-    "q78_quality_repetition" -> q78Oracle,
-    "q79_pii_redact"         -> q79Oracle,
-    "q80_stratified_sample"  -> q80Oracle,
-    "q82_vec_quantize"       -> q82Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q365_temperature_mixture", q365TemperatureMixture, q365Oracle),
+    QuerySpec("q344_erasure_plan", q344ErasurePlan, q344Oracle),
+    QuerySpec("q345_snapshot_diff", q345SnapshotDiff, q345Oracle),
+    QuerySpec("q316_source_novelty", q316SourceNovelty, q316Oracle),
+    QuerySpec("q320_neyman_allocation", q320NeymanAllocation, q320Oracle),
+    QuerySpec("q305_greedy_coverage", q305GreedyCoverage, q305Oracle),
+    QuerySpec("q282_eval_blast_radius", q282EvalBlastRadius, q282Oracle),
+    QuerySpec("q284_effective_corpus", q284EffectiveCorpus, q284Oracle),
+    QuerySpec("q276_holdout_sample", q276HoldoutSample, q276Oracle),
+    QuerySpec("q274_top_p_curation", q274TopPCuration, q274Oracle),
+    QuerySpec("q265_span_corruption", q265SpanCorruption, q265Oracle),
+    QuerySpec("q233_apportionment", q233Apportionment, q233Oracle),
+    QuerySpec("q225_policy_regex_filter", q225PolicyRegexFilter, q225Oracle),
+    QuerySpec("q218_lang_quality_buckets", q218LangQualityBuckets, q218Oracle),
+    QuerySpec("q212_html_extract", q212HtmlExtract, q212Oracle),
+    QuerySpec("q199_duplicate_chunks", q199DuplicateChunks, q199Oracle),
+    QuerySpec("q198_upsample_materialize", q198UpsampleMaterialize, q198Oracle),
+    QuerySpec("q197_url_canonical_dedup", q197UrlCanonicalDedup, q197Oracle),
+    QuerySpec("q194_token_budget_mixture", q194TokenBudgetMixture, q194Oracle),
+    QuerySpec("q193_incremental_domain_curation", q193IncrementalDomainCuration, q193Oracle),
+    QuerySpec("q191_domain_curation", q191DomainCuration, q191Oracle),
+    QuerySpec("q188_subword_decontaminate", q188SubwordDecontaminate, q188Oracle),
+    QuerySpec("q168_curation_pipeline", q168CurationPipeline, q168Oracle),
+    QuerySpec("q164_span_decontaminate", q164SpanDecontaminate, q164Oracle),
+    QuerySpec("q163_creditcard_redact", q163CreditCardRedact, q163Oracle),
+    QuerySpec("q160_classifier_training", q160ClassifierTraining, q160Oracle),
+    QuerySpec("q152_bpe_train", q152BpeTrain, q152Oracle),
+    QuerySpec("q151_unicode_normalize", q151UnicodeNormalize, q151Oracle),
+    QuerySpec("q136_quality_classifier", q136QualityClassifier, q136Oracle),
+    QuerySpec("q135_doc_fluency", q135DocFluency, q135Oracle),
+    QuerySpec("q134_corpus_mixture", q134CorpusMixture, q134Oracle),
+    QuerySpec("q133_contamination", q133ContaminationCheck, q133Oracle),
+    QuerySpec("q127_sample_per_stratum", q127SamplePerStratum, q127Oracle),
+    QuerySpec("q104_outlier_zscore", q104OutlierZscore, q104Oracle),
+    QuerySpec("q101_doc_chunking", q101DocChunking, q101Oracle),
+    QuerySpec("q90_cms_heavy_hitters", q90CmsHeavyHitters, q90Oracle),
+    QuerySpec("q91_weighted_sample", q91WeightedSample, q91Oracle),
+    QuerySpec("q78_quality_repetition", q78QualityRepetition, q78Oracle),
+    QuerySpec("q79_pii_redact", q79PiiRedact, q79Oracle),
+    QuerySpec("q80_stratified_sample", q80StratifiedSample, q80Oracle),
+    QuerySpec("q82_vec_quantize", q82VecQuantize, q82Oracle))
 }

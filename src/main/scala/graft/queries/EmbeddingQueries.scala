@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Embedding-space diagnostics — the statistics a vector corpus needs
   * before anyone trusts ANN results over it: the feature covariance
@@ -797,27 +797,15 @@ object EmbeddingQueries {
        |  CAST(MAX(s_ppm) AS BIGINT) AS max_s_ppm
        |FROM s GROUP BY 1 ORDER BY cid""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q361_mmr_rerank" -> (q361MmrRerank _),
-    "q362_silhouette" -> (q362Silhouette _),
-    "q336_embedding_anisotropy" -> (q336EmbeddingAnisotropy _),
-    "q313_centroid_drift" -> (q313CentroidDrift _),
-    "q301_power_iteration"  -> (q301PowerIteration _),
-    "q286_label_cell_occupancy" -> (q286LabelCellOccupancy _),
-    "q226_embedding_covariance" -> (q226EmbeddingCovariance _),
-    "q227_centroid_drift"       -> (q227CentroidDrift _),
-    "q240_otsu_binarization"    -> (q240OtsuBinarization _),
-    "q241_hard_negatives"       -> (q241HardNegatives _))
-
-  val oracles: Map[String, String] = Map(
-    "q361_mmr_rerank" -> q361Oracle,
-    "q362_silhouette" -> q362Oracle,
-    "q336_embedding_anisotropy" -> q336Oracle,
-    "q313_centroid_drift" -> q313Oracle,
-    "q301_power_iteration"  -> q301Oracle,
-    "q286_label_cell_occupancy" -> q286Oracle,
-    "q226_embedding_covariance" -> q226Oracle,
-    "q227_centroid_drift"       -> q227Oracle,
-    "q240_otsu_binarization"    -> q240Oracle,
-    "q241_hard_negatives"       -> q241Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q361_mmr_rerank", q361MmrRerank, q361Oracle),
+    QuerySpec("q362_silhouette", q362Silhouette, q362Oracle),
+    QuerySpec("q336_embedding_anisotropy", q336EmbeddingAnisotropy, q336Oracle),
+    QuerySpec("q313_centroid_drift", q313CentroidDrift, q313Oracle),
+    QuerySpec("q301_power_iteration", q301PowerIteration, q301Oracle),
+    QuerySpec("q286_label_cell_occupancy", q286LabelCellOccupancy, q286Oracle),
+    QuerySpec("q226_embedding_covariance", q226EmbeddingCovariance, q226Oracle),
+    QuerySpec("q227_centroid_drift", q227CentroidDrift, q227Oracle),
+    QuerySpec("q240_otsu_binarization", q240OtsuBinarization, q240Oracle),
+    QuerySpec("q241_hard_negatives", q241HardNegatives, q241Oracle))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.model.{ColumnMapping, TargetSchema}
 import graft.store.Upsert
 import graft.transform.Transforms
@@ -492,33 +492,18 @@ object EtlQueries {
       |WHERE last_op <> 'D'
       |ORDER BY o_orderkey""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q255_cdc_compaction" -> (q255CdcCompaction _),
-    "q130_profile_columns" -> (q130ProfileColumns _),
-    "q129_change_feed"  -> (q129ChangeFeed _),
-    "q102_scd2_history" -> (q102Scd2History _),
-    "q201_pit_join" -> (q201PitJoin _),
-    "q70_cdc_apply"     -> (q70CdcApply _),
-    "q71_data_quality"  -> (q71DataQuality _),
-    "q68_etl_pipeline"  -> (q68EtlPipeline _),
-    "q27_dedup_exact"   -> (q27DedupExact _),
-    "q28_dedup_keyed"   -> (q28DedupKeyed _),
-    "q29_schema_map"    -> (q29SchemaMap _),
-    "q30_upsert"        -> (q30Upsert _),
-    "q31_aes_roundtrip" -> (q31AesRoundtrip _))
-
-  val oracles: Map[String, String] = Map(
-    "q255_cdc_compaction" -> q255Oracle,
-    "q130_profile_columns" -> q130Oracle,
-    "q129_change_feed"  -> q129Oracle,
-    "q102_scd2_history" -> q102Oracle,
-    "q201_pit_join" -> q201Oracle,
-    "q70_cdc_apply"     -> q70CdcOracle,
-    "q71_data_quality"  -> q71Oracle,
-    "q68_etl_pipeline"  -> q68Oracle,
-    "q27_dedup_exact"   -> q27Oracle,
-    "q28_dedup_keyed"   -> q28Oracle,
-    "q29_schema_map"    -> q29Oracle,
-    "q30_upsert"        -> q30Oracle,
-    "q31_aes_roundtrip" -> q31Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q255_cdc_compaction", q255CdcCompaction, q255Oracle),
+    QuerySpec("q130_profile_columns", q130ProfileColumns, q130Oracle),
+    QuerySpec("q129_change_feed", q129ChangeFeed, q129Oracle),
+    QuerySpec("q102_scd2_history", q102Scd2History, q102Oracle),
+    QuerySpec("q201_pit_join", q201PitJoin, q201Oracle),
+    QuerySpec("q70_cdc_apply", q70CdcApply, q70CdcOracle),
+    QuerySpec("q71_data_quality", q71DataQuality, q71Oracle),
+    QuerySpec("q68_etl_pipeline", q68EtlPipeline, q68Oracle),
+    QuerySpec("q27_dedup_exact", q27DedupExact, q27Oracle),
+    QuerySpec("q28_dedup_keyed", q28DedupKeyed, q28Oracle),
+    QuerySpec("q29_schema_map", q29SchemaMap, q29Oracle),
+    QuerySpec("q30_upsert", q30Upsert, q30Oracle),
+    QuerySpec("q31_aes_roundtrip", q31AesRoundtrip, q31Oracle))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
+import graft.QuerySpec
+
 /** In-engine MODEL EVALUATION over the curation suite's own classifier:
   * the reliability diagram and the exact ROC-AUC of q136's quality scorer
   * judged against q78's heuristic gate as the reference label. Training
@@ -1883,47 +1885,25 @@ object EvalQueries {
        |FROM r CROSS JOIN g
        |ORDER BY lang""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q366_horvitz_thompson" -> (q366HorvitzThompson _),
-    "q367_quantile_effects" -> (q367QuantileEffects _),
-    "q368_fairness_slices"  -> (q368FairnessSlices _),
-    "q351_confusion_suite" -> (q351ConfusionSuite _),
-    "q352_calibration_gap" -> (q352CalibrationGap _),
-    "q353_cuped"           -> (q353Cuped _),
-    "q354_mde_audit"       -> (q354MdeAudit _),
-    "q338_youden_threshold" -> (q338YoudenThreshold _),
-    "q330_mcnemar"         -> (q330McNemar _),
-    "q331_average_precision" -> (q331AveragePrecision _),
-    "q324_krippendorff_alpha" -> (q324KrippendorffAlpha _),
-    "q307_stump_crossval"  -> (q307StumpCrossVal _),
-    "q289_conformal_calibration" -> (q289ConformalCalibration _),
-    "q238_decision_stump"      -> (q238DecisionStump _),
-    "q232_poisson_bootstrap"   -> (q232PoissonBootstrap _),
-    "q219_chi2_source_drift"   -> (q219Chi2SourceDrift _),
-    "q207_reliability_deciles" -> (q207ReliabilityDeciles _),
-    "q208_auc_exact"           -> (q208AucExact _),
-    "q210_lsh_param_audit"     -> (q210LshParamAudit _),
-    "q215_cohens_kappa"        -> (q215CohensKappa _))
-
-  val oracles: Map[String, String] = Map(
-    "q366_horvitz_thompson" -> q366Oracle,
-    "q367_quantile_effects" -> q367Oracle,
-    "q368_fairness_slices"  -> q368Oracle,
-    "q351_confusion_suite" -> q351Oracle,
-    "q352_calibration_gap" -> q352Oracle,
-    "q353_cuped"           -> q353Oracle,
-    "q354_mde_audit"       -> q354Oracle,
-    "q338_youden_threshold" -> q338Oracle,
-    "q330_mcnemar"         -> q330Oracle,
-    "q331_average_precision" -> q331Oracle,
-    "q324_krippendorff_alpha" -> q324Oracle,
-    "q307_stump_crossval"  -> q307Oracle,
-    "q289_conformal_calibration" -> q289Oracle,
-    "q238_decision_stump"      -> q238Oracle,
-    "q232_poisson_bootstrap"   -> q232Oracle,
-    "q219_chi2_source_drift"   -> q219Oracle,
-    "q207_reliability_deciles" -> q207Oracle,
-    "q208_auc_exact"           -> q208Oracle,
-    "q210_lsh_param_audit"     -> q210Oracle,
-    "q215_cohens_kappa"        -> q215Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q366_horvitz_thompson", q366HorvitzThompson, q366Oracle),
+    QuerySpec("q367_quantile_effects", q367QuantileEffects, q367Oracle),
+    QuerySpec("q368_fairness_slices", q368FairnessSlices, q368Oracle),
+    QuerySpec("q351_confusion_suite", q351ConfusionSuite, q351Oracle),
+    QuerySpec("q352_calibration_gap", q352CalibrationGap, q352Oracle),
+    QuerySpec("q353_cuped", q353Cuped, q353Oracle),
+    QuerySpec("q354_mde_audit", q354MdeAudit, q354Oracle),
+    QuerySpec("q338_youden_threshold", q338YoudenThreshold, q338Oracle),
+    QuerySpec("q330_mcnemar", q330McNemar, q330Oracle),
+    QuerySpec("q331_average_precision", q331AveragePrecision, q331Oracle),
+    QuerySpec("q324_krippendorff_alpha", q324KrippendorffAlpha, q324Oracle),
+    QuerySpec("q307_stump_crossval", q307StumpCrossVal, q307Oracle),
+    QuerySpec("q289_conformal_calibration", q289ConformalCalibration, q289Oracle),
+    QuerySpec("q238_decision_stump", q238DecisionStump, q238Oracle),
+    QuerySpec("q232_poisson_bootstrap", q232PoissonBootstrap, q232Oracle),
+    QuerySpec("q219_chi2_source_drift", q219Chi2SourceDrift, q219Oracle),
+    QuerySpec("q207_reliability_deciles", q207ReliabilityDeciles, q207Oracle),
+    QuerySpec("q208_auc_exact", q208AucExact, q208Oracle),
+    QuerySpec("q210_lsh_param_audit", q210LshParamAudit, q210Oracle),
+    QuerySpec("q215_cohens_kappa", q215CohensKappa, q215Oracle))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.Aggregators
 import graft.functions.Similarity.toDouble
 import graft.multimodal.Multimodal
@@ -846,39 +846,21 @@ object ExtensionQueries {
        |FROM pf
        |ORDER BY doc_id""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q243_scene_cuts"        -> (q243SceneCuts _),
-    "q209_audio_vad"         -> (q209AudioVad _),
-    "q167_audio_neardup"     -> (q167AudioNearDup _),
-    "q166_image_neardup"     -> (q166ImageNearDup _),
-    "q113_video_meta"        -> (q113VideoMeta _),
-    "q131_video_pixels"      -> (q131VideoPixels _),
-    "q47_udf_source_id"      -> (q47UdfSourceId _),
-    "q48_udaf_vecavg"        -> (q48UdafVecAvg _),
-    "q49_multimodal_meta"    -> (q49MultimodalMeta _),
-    "q50_multimodal_features" -> (q50MultimodalFeatures _),
-    "q51_frame_sample"       -> (q51FrameSample _),
-    "q190_crossmodal_alignment" -> (q190CrossModalAlignment _),
-    "q140_image_resize"      -> (q140ImageResize _),
-    "q145_audio_resample"    -> (q145AudioResample _),
-    "q158_video_resample"    -> (q158VideoResample _),
-    "q86_audio_features"     -> (q86AudioFeatures _))
-
-  val oracles: Map[String, String] = Map(
-    "q243_scene_cuts"        -> q243Oracle,
-    "q209_audio_vad"         -> q209Oracle,
-    "q167_audio_neardup"     -> q167Oracle,
-    "q166_image_neardup"     -> q166Oracle,
-    "q113_video_meta"        -> q113Oracle,
-    "q131_video_pixels"      -> q131Oracle,
-    "q47_udf_source_id"      -> q47Oracle,
-    "q48_udaf_vecavg"        -> q48Oracle,
-    "q49_multimodal_meta"    -> q49Oracle,
-    "q50_multimodal_features" -> q50Oracle,
-    "q51_frame_sample"       -> q51Oracle,
-    "q190_crossmodal_alignment" -> q190Oracle,
-    "q140_image_resize"      -> q140Oracle,
-    "q145_audio_resample"    -> q145Oracle,
-    "q158_video_resample"    -> q158Oracle,
-    "q86_audio_features"     -> q86Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q243_scene_cuts", q243SceneCuts, q243Oracle),
+    QuerySpec("q209_audio_vad", q209AudioVad, q209Oracle),
+    QuerySpec("q167_audio_neardup", q167AudioNearDup, q167Oracle),
+    QuerySpec("q166_image_neardup", q166ImageNearDup, q166Oracle),
+    QuerySpec("q113_video_meta", q113VideoMeta, q113Oracle),
+    QuerySpec("q131_video_pixels", q131VideoPixels, q131Oracle),
+    QuerySpec("q47_udf_source_id", q47UdfSourceId, q47Oracle),
+    QuerySpec("q48_udaf_vecavg", q48UdafVecAvg, q48Oracle),
+    QuerySpec("q49_multimodal_meta", q49MultimodalMeta, q49Oracle),
+    QuerySpec("q50_multimodal_features", q50MultimodalFeatures, q50Oracle),
+    QuerySpec("q51_frame_sample", q51FrameSample, q51Oracle),
+    QuerySpec("q190_crossmodal_alignment", q190CrossModalAlignment, q190Oracle),
+    QuerySpec("q140_image_resize", q140ImageResize, q140Oracle),
+    QuerySpec("q145_audio_resample", q145AudioResample, q145Oracle),
+    QuerySpec("q158_video_resample", q158VideoResample, q158Oracle),
+    QuerySpec("q86_audio_features", q86AudioFeatures, q86Oracle))
 }

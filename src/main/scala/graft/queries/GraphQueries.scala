@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.Similarity
 
 /** Graph operators over data-derived edge lists: transitive near-dup
@@ -959,31 +959,17 @@ object GraphQueries {
        |    ELSE -((-rn) * 1000000 // rd) END AS BIGINT) AS r_ppm
        |FROM r""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q325_degree_assortativity" -> (q325DegreeAssortativity _),
-    "q295_hits"               -> (q295Hits _),
-    "q269_dedup_map"          -> (q269DedupMap _),
-    "q333_quality_canonical_map" -> (q333QualityCanonicalMap _),
-    "q342_cluster_depth"      -> (q342ClusterDepth _),
-    "q141_neardup_components" -> (q141NearDupComponents _),
-    "q142_pagerank"           -> (q142PageRank _),
-    "q150_incremental_components" -> (q150IncrementalComponents _),
-    "q308_incr_components_prod" -> (q308IncrComponentsProd _),
-    "q280_cluster_cohesion"   -> (q280ClusterCohesion _),
-    "q200_triangle_census"    -> (q200TriangleCensus _),
-    "q204_kcore"              -> (q204KCoreDecomposition _))
-
-  val oracles: Map[String, String] = Map(
-    "q325_degree_assortativity" -> q325Oracle,
-    "q295_hits"               -> q295Oracle,
-    "q269_dedup_map"          -> q269Oracle,
-    "q333_quality_canonical_map" -> q333Oracle,
-    "q342_cluster_depth"      -> q342Oracle,
-    "q141_neardup_components" -> q141Oracle,
-    "q142_pagerank"           -> q142Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q325_degree_assortativity", q325DegreeAssortativity, q325Oracle),
+    QuerySpec("q295_hits", q295Hits, q295Oracle),
+    QuerySpec("q269_dedup_map", q269DedupMap, q269Oracle),
+    QuerySpec("q333_quality_canonical_map", q333QualityCanonicalMap, q333Oracle),
+    QuerySpec("q342_cluster_depth", q342ClusterDepth, q342Oracle),
+    QuerySpec("q141_neardup_components", q141NearDupComponents, q141Oracle),
+    QuerySpec("q142_pagerank", q142PageRank, q142Oracle),
     // identical full-closure oracle by design: incremental merge must
     // equal the from-scratch clustering
-    "q150_incremental_components" -> q141Oracle,
+    QuerySpec("q150_incremental_components", q150IncrementalComponents, q141Oracle),
     // production path reads the persisted base index; answer contract is
     // still exact equality with the from-scratch closure. q271 (the same
     // frontier merge with the base index derived in-query) was RETIRED
@@ -992,8 +978,8 @@ object GraphQueries {
     // coverage this q308 row + GraphSpec's q271≡q141 and q308≡q271
     // invariants already carry; the operator itself remains (q308 calls
     // it). Decision record: PLANS.md §round-13.
-    "q308_incr_components_prod" -> q141Oracle,
-    "q280_cluster_cohesion"   -> q280Oracle,
-    "q200_triangle_census"    -> q200Oracle,
-    "q204_kcore"              -> q204Oracle)
+    QuerySpec("q308_incr_components_prod", q308IncrComponentsProd, q141Oracle),
+    QuerySpec("q280_cluster_cohesion", q280ClusterCohesion, q280Oracle),
+    QuerySpec("q200_triangle_census", q200TriangleCensus, q200Oracle),
+    QuerySpec("q204_kcore", q204KCoreDecomposition, q204Oracle))
 }

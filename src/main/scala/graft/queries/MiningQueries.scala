@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Data-mining / data-integration operators over the TPC-H-ish tables:
   * entity resolution, association mining, incremental view maintenance,
@@ -1785,55 +1785,29 @@ object MiningQueries {
       |    // (a.d + b.d - n_common) AS BIGINT) DESC, cust_a, cust_b
       |LIMIT 100""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q359_markov_stationary" -> (q359MarkovStationary _),
-    "q360_copurchase_affinity" -> (q360CopurchaseAffinity _),
-    "q347_session_baskets" -> (q347SessionBaskets _),
-    "q326_sequence_trigrams" -> (q326SequenceTrigrams _),
-    "q300_term_projection"  -> (q300TermProjection _),
-    "q220_pmi_collocations" -> (q220PmiCollocations _),
-    "q169_entity_resolution" -> (q169EntityResolution _),
-    "q170_basket_pairs"      -> (q170BasketPairs _),
-    "q171_incremental_agg"   -> (q171IncrementalAggMaintenance _),
-    "q172_quantile_normalize" -> (q172QuantileNormalize _),
-    "q173_transition_matrix" -> (q173TransitionMatrix _),
-    "q174_random_projection" -> (q174RandomProjection _),
-    "q175_boilerplate_removal" -> (q175BoilerplateRemoval _),
-    "q176_event_debounce"    -> (q176EventDebounce _),
-    "q177_skew_diagnosis"    -> (q177SkewDiagnosis _),
-    "q178_ann_recall_eval"   -> (q178AnnRecallEval _),
-    "q179_snapshot_diff"     -> (q179SnapshotDiff _),
-    "q180_winsorize"         -> (q180Winsorize _),
-    "q181_trend_per_segment" -> (q181TrendPerSegment _),
-    "q182_contrastive_pairs" -> (q182ContrastivePairs _),
-    "q183_delta_gap_encoding" -> (q183DeltaGapEncoding _),
-    "q184_dedup_aware_folds" -> (q184DedupAwareFolds _),
-    "q185_diversity_screen"  -> (q185DiversityScreen _),
-    "q186_cdc_chunking"      -> (q186ContentDefinedChunking _))
-
-  val oracles: Map[String, String] = Map(
-    "q359_markov_stationary" -> q359Oracle,
-    "q360_copurchase_affinity" -> q360Oracle,
-    "q347_session_baskets" -> q347Oracle,
-    "q326_sequence_trigrams" -> q326Oracle,
-    "q300_term_projection"  -> q300Oracle,
-    "q220_pmi_collocations" -> q220Oracle,
-    "q169_entity_resolution" -> q169Oracle,
-    "q170_basket_pairs"      -> q170Oracle,
-    "q171_incremental_agg"   -> q171Oracle,
-    "q172_quantile_normalize" -> q172Oracle,
-    "q173_transition_matrix" -> q173Oracle,
-    "q174_random_projection" -> q174Oracle,
-    "q175_boilerplate_removal" -> q175Oracle,
-    "q176_event_debounce"    -> q176Oracle,
-    "q177_skew_diagnosis"    -> q177Oracle,
-    "q178_ann_recall_eval"   -> q178Oracle,
-    "q179_snapshot_diff"     -> q179Oracle,
-    "q180_winsorize"         -> q180Oracle,
-    "q181_trend_per_segment" -> q181Oracle,
-    "q182_contrastive_pairs" -> q182Oracle,
-    "q183_delta_gap_encoding" -> q183Oracle,
-    "q184_dedup_aware_folds" -> q184Oracle,
-    "q185_diversity_screen"  -> q185Oracle,
-    "q186_cdc_chunking"      -> q186Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q359_markov_stationary", q359MarkovStationary, q359Oracle),
+    QuerySpec("q360_copurchase_affinity", q360CopurchaseAffinity, q360Oracle),
+    QuerySpec("q347_session_baskets", q347SessionBaskets, q347Oracle),
+    QuerySpec("q326_sequence_trigrams", q326SequenceTrigrams, q326Oracle),
+    QuerySpec("q300_term_projection", q300TermProjection, q300Oracle),
+    QuerySpec("q220_pmi_collocations", q220PmiCollocations, q220Oracle),
+    QuerySpec("q169_entity_resolution", q169EntityResolution, q169Oracle),
+    QuerySpec("q170_basket_pairs", q170BasketPairs, q170Oracle),
+    QuerySpec("q171_incremental_agg", q171IncrementalAggMaintenance, q171Oracle),
+    QuerySpec("q172_quantile_normalize", q172QuantileNormalize, q172Oracle),
+    QuerySpec("q173_transition_matrix", q173TransitionMatrix, q173Oracle),
+    QuerySpec("q174_random_projection", q174RandomProjection, q174Oracle),
+    QuerySpec("q175_boilerplate_removal", q175BoilerplateRemoval, q175Oracle),
+    QuerySpec("q176_event_debounce", q176EventDebounce, q176Oracle),
+    QuerySpec("q177_skew_diagnosis", q177SkewDiagnosis, q177Oracle),
+    QuerySpec("q178_ann_recall_eval", q178AnnRecallEval, q178Oracle),
+    QuerySpec("q179_snapshot_diff", q179SnapshotDiff, q179Oracle),
+    QuerySpec("q180_winsorize", q180Winsorize, q180Oracle),
+    QuerySpec("q181_trend_per_segment", q181TrendPerSegment, q181Oracle),
+    QuerySpec("q182_contrastive_pairs", q182ContrastivePairs, q182Oracle),
+    QuerySpec("q183_delta_gap_encoding", q183DeltaGapEncoding, q183Oracle),
+    QuerySpec("q184_dedup_aware_folds", q184DedupAwareFolds, q184Oracle),
+    QuerySpec("q185_diversity_screen", q185DiversityScreen, q185Oracle),
+    QuerySpec("q186_cdc_chunking", q186ContentDefinedChunking, q186Oracle))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Data-profiling operators — the discovery passes a data platform runs
   * against tables it did NOT design: which functional dependencies
@@ -2233,69 +2233,36 @@ object ProfilingQueries {
       |FROM rk CROSS JOIN best
       |ORDER BY join_order""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q370_join_order_audit" -> (q370JoinOrderAudit _),
-    "q369_encoding_advisor" -> (q369EncodingAdvisor _),
-    "q363_l_diversity"     -> (q363LDiversity _),
-    "q364_t_closeness"     -> (q364TCloseness _),
-    "q355_kruskal_wallis"  -> (q355KruskalWallis _),
-    "q356_wilcoxon_signed" -> (q356WilcoxonSignedRank _),
-    "q357_cramers_v"       -> (q357CramersV _),
-    "q339_cochran_armitage" -> (q339CochranArmitage _),
-    "q328_spearman_corr"   -> (q328SpearmanCorr _),
-    "q327_runs_test"       -> (q327RunsTest _),
-    "q322_mann_whitney"    -> (q322MannWhitney _),
-    "q319_ks_distance"     -> (q319KsDistance _),
-    "q310_kmv_distinct"    -> (q310KmvDistinct _),
-    "q302_join_card_estimate" -> (q302JoinCardEstimate _),
-    "q290_good_turing"     -> (q290GoodTuring _),
-    "q287_k_anonymity"     -> (q287KAnonymity _),
-    "q288_temporal_audit"  -> (q288TemporalAudit _),
-    "q281_freq_profile"    -> (q281FreqProfile _),
-    "q272_winsorized_quality" -> (q272WinsorizedQuality _),
-    "q277_layout_advisor"  -> (q277LayoutAdvisor _),
-    "q267_key_discovery"   -> (q267KeyDiscovery _),
-    "q262_abc_classes"     -> (q262AbcClasses _),
-    "q263_reconciliation"  -> (q263Reconciliation _),
-    "q252_gini_value"      -> (q252GiniValue _),
-    "q251_hll_distinct"    -> (q251HllDistinct _),
-    "q248_equidepth_histogram" -> (q248EquidepthHistogram _),
-    "q245_join_fanout"     -> (q245JoinFanout _),
-    "q229_fd_discovery"    -> (q229FdDiscovery _),
-    "q230_ri_audit"        -> (q230RiAudit _),
-    "q234_benford_audit"   -> (q234BenfordAudit _),
-    "q235_constraint_audit" -> (q235ConstraintAudit _))
-
-  val oracles: Map[String, String] = Map(
-    "q370_join_order_audit" -> q370Oracle,
-    "q369_encoding_advisor" -> q369Oracle,
-    "q363_l_diversity"     -> q363Oracle,
-    "q364_t_closeness"     -> q364Oracle,
-    "q355_kruskal_wallis"  -> q355Oracle,
-    "q356_wilcoxon_signed" -> q356Oracle,
-    "q357_cramers_v"       -> q357Oracle,
-    "q339_cochran_armitage" -> q339Oracle,
-    "q328_spearman_corr"   -> q328Oracle,
-    "q327_runs_test"       -> q327Oracle,
-    "q322_mann_whitney"    -> q322Oracle,
-    "q319_ks_distance"     -> q319Oracle,
-    "q310_kmv_distinct"    -> q310Oracle,
-    "q302_join_card_estimate" -> q302Oracle,
-    "q290_good_turing"     -> q290Oracle,
-    "q287_k_anonymity"     -> q287Oracle,
-    "q288_temporal_audit"  -> q288Oracle,
-    "q281_freq_profile"    -> q281Oracle,
-    "q272_winsorized_quality" -> q272Oracle,
-    "q277_layout_advisor"  -> q277Oracle,
-    "q267_key_discovery"   -> q267Oracle,
-    "q262_abc_classes"     -> q262Oracle,
-    "q263_reconciliation"  -> q263Oracle,
-    "q252_gini_value"      -> q252Oracle,
-    "q251_hll_distinct"    -> q251Oracle,
-    "q248_equidepth_histogram" -> q248Oracle,
-    "q245_join_fanout"     -> q245Oracle,
-    "q229_fd_discovery"    -> q229Oracle,
-    "q230_ri_audit"        -> q230Oracle,
-    "q234_benford_audit"   -> q234Oracle,
-    "q235_constraint_audit" -> q235Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q370_join_order_audit", q370JoinOrderAudit, q370Oracle),
+    QuerySpec("q369_encoding_advisor", q369EncodingAdvisor, q369Oracle),
+    QuerySpec("q363_l_diversity", q363LDiversity, q363Oracle),
+    QuerySpec("q364_t_closeness", q364TCloseness, q364Oracle),
+    QuerySpec("q355_kruskal_wallis", q355KruskalWallis, q355Oracle),
+    QuerySpec("q356_wilcoxon_signed", q356WilcoxonSignedRank, q356Oracle),
+    QuerySpec("q357_cramers_v", q357CramersV, q357Oracle),
+    QuerySpec("q339_cochran_armitage", q339CochranArmitage, q339Oracle),
+    QuerySpec("q328_spearman_corr", q328SpearmanCorr, q328Oracle),
+    QuerySpec("q327_runs_test", q327RunsTest, q327Oracle),
+    QuerySpec("q322_mann_whitney", q322MannWhitney, q322Oracle),
+    QuerySpec("q319_ks_distance", q319KsDistance, q319Oracle),
+    QuerySpec("q310_kmv_distinct", q310KmvDistinct, q310Oracle),
+    QuerySpec("q302_join_card_estimate", q302JoinCardEstimate, q302Oracle),
+    QuerySpec("q290_good_turing", q290GoodTuring, q290Oracle),
+    QuerySpec("q287_k_anonymity", q287KAnonymity, q287Oracle),
+    QuerySpec("q288_temporal_audit", q288TemporalAudit, q288Oracle),
+    QuerySpec("q281_freq_profile", q281FreqProfile, q281Oracle),
+    QuerySpec("q272_winsorized_quality", q272WinsorizedQuality, q272Oracle),
+    QuerySpec("q277_layout_advisor", q277LayoutAdvisor, q277Oracle),
+    QuerySpec("q267_key_discovery", q267KeyDiscovery, q267Oracle),
+    QuerySpec("q262_abc_classes", q262AbcClasses, q262Oracle),
+    QuerySpec("q263_reconciliation", q263Reconciliation, q263Oracle),
+    QuerySpec("q252_gini_value", q252GiniValue, q252Oracle),
+    QuerySpec("q251_hll_distinct", q251HllDistinct, q251Oracle),
+    QuerySpec("q248_equidepth_histogram", q248EquidepthHistogram, q248Oracle),
+    QuerySpec("q245_join_fanout", q245JoinFanout, q245Oracle),
+    QuerySpec("q229_fd_discovery", q229FdDiscovery, q229Oracle),
+    QuerySpec("q230_ri_audit", q230RiAudit, q230Oracle),
+    QuerySpec("q234_benford_audit", q234BenfordAudit, q234Oracle),
+    QuerySpec("q235_constraint_audit", q235ConstraintAudit, q235Oracle))
 }

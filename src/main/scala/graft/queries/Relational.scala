@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Shared decimal-exactness helpers for DuckDB-oracle parity (SURVEY.md §5).
   *
@@ -409,33 +409,18 @@ object Relational {
       |GROUP BY CUBE(o_orderstatus, o_orderpriority)
       |ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg_pricing"      -> (q01Pricing _),
-    "q02_filter_predicates" -> (q02FilterPredicates _),
-    "q03_projection"       -> (q03Projection _),
-    "q04_join_inner"       -> (q04JoinInner _),
-    "q05_join_left"        -> (q05JoinLeft _),
-    "q06_join_semi"        -> (q06JoinSemi _),
-    "q07_join_anti"        -> (q07JoinAnti _),
-    "q08_join_range"       -> (q08JoinRange _),
-    "q09_agg_multikey"     -> (q09AggMultiKey _),
-    "q10_agg_distinct"     -> (q10AggDistinct _),
-    "q11_agg_approx_distinct" -> (q11AggApproxDistinct _),
-    "q12_rollup"           -> (q12Rollup _),
-    "q13_cube"             -> (q13Cube _))
-
-  val oracles: Map[String, String] = Map(
-    "q01_agg_pricing"      -> q01Oracle,
-    "q02_filter_predicates" -> q02Oracle,
-    "q03_projection"       -> q03Oracle,
-    "q04_join_inner"       -> q04Oracle,
-    "q05_join_left"        -> q05Oracle,
-    "q06_join_semi"        -> q06Oracle,
-    "q07_join_anti"        -> q07Oracle,
-    "q08_join_range"       -> q08Oracle,
-    "q09_agg_multikey"     -> q09Oracle,
-    "q10_agg_distinct"     -> q10Oracle,
-    "q11_agg_approx_distinct" -> q11Oracle,
-    "q12_rollup"           -> q12Oracle,
-    "q13_cube"             -> q13Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_agg_pricing", q01Pricing, q01Oracle),
+    QuerySpec("q02_filter_predicates", q02FilterPredicates, q02Oracle),
+    QuerySpec("q03_projection", q03Projection, q03Oracle),
+    QuerySpec("q04_join_inner", q04JoinInner, q04Oracle),
+    QuerySpec("q05_join_left", q05JoinLeft, q05Oracle),
+    QuerySpec("q06_join_semi", q06JoinSemi, q06Oracle),
+    QuerySpec("q07_join_anti", q07JoinAnti, q07Oracle),
+    QuerySpec("q08_join_range", q08JoinRange, q08Oracle),
+    QuerySpec("q09_agg_multikey", q09AggMultiKey, q09Oracle),
+    QuerySpec("q10_agg_distinct", q10AggDistinct, q10Oracle),
+    QuerySpec("q11_agg_approx_distinct", q11AggApproxDistinct, q11Oracle),
+    QuerySpec("q12_rollup", q12Rollup, q12Oracle),
+    QuerySpec("q13_cube", q13Cube, q13Oracle))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Relational-surface completeness (tier B1–B9 addenda): full outer join,
   * unpivot/melt, explicit grouping sets. The operators a user coming from
@@ -251,19 +251,11 @@ object RelationalPlus {
       |    AND (y.price_cents < x.price_cents OR y.size > x.size))
       |ORDER BY x.price_cents, x.p_partkey""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q296_skyline"         -> (q296Skyline _),
-    "q264_share_of_parent" -> (q264ShareOfParent _),
-    "q105_null_safe_join" -> (q105NullSafeJoin _),
-    "q87_join_full_outer" -> (q87JoinFullOuter _),
-    "q88_unpivot"         -> (q88Unpivot _),
-    "q89_grouping_sets"   -> (q89GroupingSets _))
-
-  val oracles: Map[String, String] = Map(
-    "q296_skyline"         -> q296Oracle,
-    "q264_share_of_parent" -> q264Oracle,
-    "q105_null_safe_join" -> q105Oracle,
-    "q87_join_full_outer" -> q87Oracle,
-    "q88_unpivot"         -> q88Oracle,
-    "q89_grouping_sets"   -> q89Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q296_skyline", q296Skyline, q296Oracle),
+    QuerySpec("q264_share_of_parent", q264ShareOfParent, q264Oracle),
+    QuerySpec("q105_null_safe_join", q105NullSafeJoin, q105Oracle),
+    QuerySpec("q87_join_full_outer", q87JoinFullOuter, q87Oracle),
+    QuerySpec("q88_unpivot", q88Unpivot, q88Oracle),
+    QuerySpec("q89_grouping_sets", q89GroupingSets, q89Oracle))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.TextFunctions
 
 /** Corpus retrieval primitives: inverted-index construction and ranked
@@ -563,19 +563,11 @@ object RetrievalQueries {
        |FROM hits, rel_tot
        |ORDER BY k""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q222_kwic_concordance" -> (q222KwicConcordance _),
-    "q143_inverted_index" -> (q143InvertedIndex _),
-    "q144_bm25_search"    -> (q144Bm25Search _),
-    "q154_sparse_simjoin" -> (q154SparseSimJoin _),
-    "q285_rrf_fusion"     -> (q285RrfFusion _),
-    "q294_rank_eval"      -> (q294RankEval _))
-
-  val oracles: Map[String, String] = Map(
-    "q285_rrf_fusion"     -> q285Oracle,
-    "q222_kwic_concordance" -> q222Oracle,
-    "q143_inverted_index" -> q143Oracle,
-    "q144_bm25_search"    -> q144Oracle,
-    "q154_sparse_simjoin" -> q154Oracle,
-    "q294_rank_eval"      -> q294Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q222_kwic_concordance", q222KwicConcordance, q222Oracle),
+    QuerySpec("q143_inverted_index", q143InvertedIndex, q143Oracle),
+    QuerySpec("q144_bm25_search", q144Bm25Search, q144Oracle),
+    QuerySpec("q154_sparse_simjoin", q154SparseSimJoin, q154Oracle),
+    QuerySpec("q285_rrf_fusion", q285RrfFusion, q285Oracle),
+    QuerySpec("q294_rank_eval", q294RankEval, q294Oracle))
 }

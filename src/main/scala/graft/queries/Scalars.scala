@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Tier-B set operations and the scalar function library
   * (SURVEY.md §2.B B12–B13).
@@ -235,25 +235,14 @@ object Scalars {
       |FROM i FULL JOIN e ON i.ck = e.ck
       |ORDER BY ck""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q126_set_ops_all" -> (q126SetOpsAll _),
-    "q19_union"        -> (q19Union _),
-    "q20_intersect"    -> (q20Intersect _),
-    "q21_except"       -> (q21Except _),
-    "q22_string_fn"    -> (q22StringFn _),
-    "q23_math_date_fn" -> (q23MathDateFn _),
-    "q24_array_fn"     -> (q24ArrayFn _),
-    "q25_json_fn"      -> (q25JsonFn _),
-    "q26_conditional"  -> (q26Conditional _))
-
-  val oracles: Map[String, String] = Map(
-    "q126_set_ops_all" -> q126Oracle,
-    "q19_union"        -> q19Oracle,
-    "q20_intersect"    -> q20Oracle,
-    "q21_except"       -> q21Oracle,
-    "q22_string_fn"    -> q22Oracle,
-    "q23_math_date_fn" -> q23Oracle,
-    "q24_array_fn"     -> q24Oracle,
-    "q25_json_fn"      -> q25Oracle,
-    "q26_conditional"  -> q26Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q126_set_ops_all", q126SetOpsAll, q126Oracle),
+    QuerySpec("q19_union", q19Union, q19Oracle),
+    QuerySpec("q20_intersect", q20Intersect, q20Oracle),
+    QuerySpec("q21_except", q21Except, q21Oracle),
+    QuerySpec("q22_string_fn", q22StringFn, q22Oracle),
+    QuerySpec("q23_math_date_fn", q23MathDateFn, q23Oracle),
+    QuerySpec("q24_array_fn", q24ArrayFn, q24Oracle),
+    QuerySpec("q25_json_fn", q25JsonFn, q25Oracle),
+    QuerySpec("q26_conditional", q26Conditional, q26Oracle))
 }

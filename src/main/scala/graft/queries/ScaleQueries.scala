@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Liter
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.transform.Skew
 
 /** Gate queries for the two explicit 100 TB shuffle postures (SURVEY §7):
@@ -872,37 +872,20 @@ object ScaleQueries {
        |FROM rep ORDER BY strategy""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q371_shard_rebalance"    -> (q371ShardRebalance _),
-    "q297_zonemap_skip"       -> (q297ZonemapSkip _),
-    "q249_salt_plan"          -> (q249SaltPlan _),
-    "q165_length_bucketed_batching" -> (q165LengthBucketedBatching _),
-    "q153_sorted_layout" -> (q153SortedLayout _),
-    "q148_approx_percentile_audit" -> (q148ApproxPercentileAudit _),
-    "q149_equidepth_bins" -> (q149EquiDepthBins _),
-    "q122_band_join"    -> (q122BandJoin _),
-    "q116_dynamic_partition_overwrite" -> (q116DynamicPartitionOverwrite _),
-    "q95_compaction"      -> (q95Compaction _),
-    "q93_bloom_pruned_join" -> (q93BloomPrunedJoin _),
-    "q75_bucketed_join"   -> (q75BucketedJoin _),
-    "q77_skew_salted_join" -> (q77SkewSaltedJoin _),
-    "q83_partition_pruning" -> (q83PartitionPruning _),
-    "q92_zorder_cluster"  -> (q92ZorderCluster _))
-
-  val oracles: Map[String, String] = Map(
-    "q371_shard_rebalance"    -> q371Oracle,
-    "q297_zonemap_skip"       -> q297Oracle,
-    "q249_salt_plan"          -> q249Oracle,
-    "q165_length_bucketed_batching" -> q165Oracle,
-    "q153_sorted_layout" -> q153Oracle,
-    "q148_approx_percentile_audit" -> q148Oracle,
-    "q149_equidepth_bins" -> q149Oracle,
-    "q122_band_join"    -> q122Oracle,
-    "q116_dynamic_partition_overwrite" -> q116Oracle,
-    "q95_compaction"      -> q95Oracle,
-    "q93_bloom_pruned_join" -> q93Oracle,
-    "q75_bucketed_join"   -> q75Oracle,
-    "q77_skew_salted_join" -> q77Oracle,
-    "q83_partition_pruning" -> q83Oracle,
-    "q92_zorder_cluster"  -> q92Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q371_shard_rebalance", q371ShardRebalance, q371Oracle),
+    QuerySpec("q297_zonemap_skip", q297ZonemapSkip, q297Oracle),
+    QuerySpec("q249_salt_plan", q249SaltPlan, q249Oracle),
+    QuerySpec("q165_length_bucketed_batching", q165LengthBucketedBatching, q165Oracle),
+    QuerySpec("q153_sorted_layout", q153SortedLayout, q153Oracle),
+    QuerySpec("q148_approx_percentile_audit", q148ApproxPercentileAudit, q148Oracle),
+    QuerySpec("q149_equidepth_bins", q149EquiDepthBins, q149Oracle),
+    QuerySpec("q122_band_join", q122BandJoin, q122Oracle),
+    QuerySpec("q116_dynamic_partition_overwrite", q116DynamicPartitionOverwrite, q116Oracle),
+    QuerySpec("q95_compaction", q95Compaction, q95Oracle),
+    QuerySpec("q93_bloom_pruned_join", q93BloomPrunedJoin, q93Oracle),
+    QuerySpec("q75_bucketed_join", q75BucketedJoin, q75Oracle),
+    QuerySpec("q77_skew_salted_join", q77SkewSaltedJoin, q77Oracle),
+    QuerySpec("q83_partition_pruning", q83PartitionPruning, q83Oracle),
+    QuerySpec("q92_zorder_cluster", q92ZorderCluster, q92Oracle))
 }

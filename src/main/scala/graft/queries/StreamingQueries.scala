@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.streaming.StreamingOps
 
 /** Windowed event aggregations, batch + streaming execution (B18). The
@@ -621,51 +621,29 @@ object StreamingQueries {
       |  ON o.w_start = n.w_start AND o.event_type = n.event_type
       |ORDER BY n.w_start, n.event_type""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q374_stream_backfill" -> (q374StreamBackfill _),
-    "q278_stream_decontam" -> (q278StreamDecontam _),
-    "q250_incremental_sessions" -> (q250IncrementalSessions _),
-    "q247_stream_rate_limit" -> (q247StreamRateLimit _),
-    "q242_stream_sessions"  -> (q242StreamSessions _),
-    "q231_stream_ohlc_bars" -> (q231StreamOhlcBars _),
-    "q211_stream_neardup_screen" -> (q211StreamNearDupScreen _),
-    "q187_stream_view_maintenance" -> (q187StreamViewMaintenance _),
-    "q118_stream_transform_state" -> (q118StreamTransformState _),
-    "q108_stream_upsert" -> (q108StreamUpsert _),
-    "q106_stream_static_join" -> (q106StreamStaticJoin _),
-    "q43_window_tumbling" -> (q43Tumbling _),
-    "q44_window_sliding"  -> (q44Sliding _),
-    "q45_session_window"  -> (q45Session _),
-    "q46_stream_tumbling" -> (q46StreamTumbling _),
-    "q73_stream_watermarked" -> (q73StreamWatermarked _),
-    "q76_stream_stream_join" -> (q76StreamStreamJoin _),
-    "q147_stream_left_outer" -> (q147StreamLeftOuterJoin _),
-    "q81_stream_dedup"    -> (q81StreamDedup _),
-    "q84_stream_custom_state" -> (q84StreamCustomState _))
-
-  val oracles: Map[String, String] = Map(
-    "q374_stream_backfill" -> q374Oracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q374_stream_backfill", q374StreamBackfill, q374Oracle),
     // streaming execution of q133's decontamination rule — the oracle IS
     // q133's batch replay (streaming must change nothing)
-    "q278_stream_decontam" -> CurationQueries.q133Oracle,
+    QuerySpec("q278_stream_decontam", q278StreamDecontam, CurationQueries.q133Oracle),
     // the incremental path must equal plain full sessionization — the
     // oracle IS q45's full-recompute SQL
-    "q250_incremental_sessions" -> q45Oracle,
-    "q247_stream_rate_limit" -> q247Oracle,
-    "q242_stream_sessions"  -> q242Oracle,
-    "q231_stream_ohlc_bars" -> q231Oracle,
-    "q211_stream_neardup_screen" -> q211Oracle,
-    "q187_stream_view_maintenance" -> q187Oracle,
-    "q118_stream_transform_state" -> q118Oracle,
-    "q108_stream_upsert" -> q108Oracle,
-    "q106_stream_static_join" -> q106Oracle,
-    "q43_window_tumbling" -> q43Oracle,
-    "q44_window_sliding"  -> q44Oracle,
-    "q45_session_window"  -> q45Oracle,
-    "q46_stream_tumbling" -> q43Oracle,
-    "q73_stream_watermarked" -> q73Oracle,
-    "q76_stream_stream_join" -> q76Oracle,
-    "q147_stream_left_outer" -> q147Oracle,
-    "q81_stream_dedup"    -> q81Oracle,
-    "q84_stream_custom_state" -> q84Oracle)
+    QuerySpec("q250_incremental_sessions", q250IncrementalSessions, q45Oracle),
+    QuerySpec("q247_stream_rate_limit", q247StreamRateLimit, q247Oracle),
+    QuerySpec("q242_stream_sessions", q242StreamSessions, q242Oracle),
+    QuerySpec("q231_stream_ohlc_bars", q231StreamOhlcBars, q231Oracle),
+    QuerySpec("q211_stream_neardup_screen", q211StreamNearDupScreen, q211Oracle),
+    QuerySpec("q187_stream_view_maintenance", q187StreamViewMaintenance, q187Oracle),
+    QuerySpec("q118_stream_transform_state", q118StreamTransformState, q118Oracle),
+    QuerySpec("q108_stream_upsert", q108StreamUpsert, q108Oracle),
+    QuerySpec("q106_stream_static_join", q106StreamStaticJoin, q106Oracle),
+    QuerySpec("q43_window_tumbling", q43Tumbling, q43Oracle),
+    QuerySpec("q44_window_sliding", q44Sliding, q44Oracle),
+    QuerySpec("q45_session_window", q45Session, q45Oracle),
+    QuerySpec("q46_stream_tumbling", q46StreamTumbling, q43Oracle),
+    QuerySpec("q73_stream_watermarked", q73StreamWatermarked, q73Oracle),
+    QuerySpec("q76_stream_stream_join", q76StreamStreamJoin, q76Oracle),
+    QuerySpec("q147_stream_left_outer", q147StreamLeftOuterJoin, q147Oracle),
+    QuerySpec("q81_stream_dedup", q81StreamDedup, q81Oracle),
+    QuerySpec("q84_stream_custom_state", q84StreamCustomState, q84Oracle))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.sources.{CsvSource, JsonSource, OrcSource, XmlSource}
 
 /** API-surface queries: the SQL parser entry point and the file-format
@@ -189,21 +189,12 @@ object SurfaceQueries {
       |GROUP BY bucket
       |ORDER BY bucket""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q117_bad_record_quarantine" -> (q117BadRecordQuarantine _),
-    "q114_schema_evolution" -> (q114SchemaEvolution _),
-    "q52_sql_entry"     -> (q52SqlEntry _),
-    "q53_csv_roundtrip" -> (q53CsvRoundtrip _),
-    "q54_json_roundtrip" -> (q54JsonRoundtrip _),
-    "q55_xml_roundtrip" -> (q55XmlRoundtrip _),
-    "q99_orc_roundtrip" -> (q99OrcRoundtrip _))
-
-  val oracles: Map[String, String] = Map(
-    "q117_bad_record_quarantine" -> q117Oracle,
-    "q114_schema_evolution" -> q114Oracle,
-    "q52_sql_entry"     -> q52Oracle,
-    "q53_csv_roundtrip" -> q53Oracle,
-    "q54_json_roundtrip" -> q54Oracle,
-    "q55_xml_roundtrip" -> q55Oracle,
-    "q99_orc_roundtrip" -> q99Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q117_bad_record_quarantine", q117BadRecordQuarantine, q117Oracle),
+    QuerySpec("q114_schema_evolution", q114SchemaEvolution, q114Oracle),
+    QuerySpec("q52_sql_entry", q52SqlEntry, q52Oracle),
+    QuerySpec("q53_csv_roundtrip", q53CsvRoundtrip, q53Oracle),
+    QuerySpec("q54_json_roundtrip", q54JsonRoundtrip, q54Oracle),
+    QuerySpec("q55_xml_roundtrip", q55XmlRoundtrip, q55Oracle),
+    QuerySpec("q99_orc_roundtrip", q99OrcRoundtrip, q99Oracle))
 }

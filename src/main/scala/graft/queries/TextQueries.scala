@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.PrefixSum
 import graft.functions.TextFunctions._
 
@@ -1424,53 +1424,28 @@ object TextQueries {
        |    - 15590 AS BIGINT) AS fk_grade_milli
        |FROM m ORDER BY source""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q358_readability" -> (q358Readability _),
-    "q334_boilerplate_phrases" -> (q334BoilerplatePhrases _),
-    "q335_cdc_chunking"      -> (q335CdcChunking _),
-    "q311_heaps_growth"      -> (q311HeapsGrowth _),
-    "q291_zipf_slope"        -> (q291ZipfSlope _),
-    "q293_term_burstiness"   -> (q293TermBurstiness _),
-    "q275_lang_fertility"    -> (q275LangFertility _),
-    "q260_vocab_coverage"    -> (q260VocabCoverage _),
-    "q254_bigram_predictor"  -> (q254BigramPredictor _),
-    "q253_source_similarity" -> (q253SourceSimilarity _),
-    "q239_textrank_keywords" -> (q239TextrankKeywords _),
-    "q224_lexical_diversity" -> (q224LexicalDiversity _),
-    "q214_epoch_shuffle" -> (q214EpochShuffle _),
-    "q195_tokenizer_coverage" -> (q195TokenizerCoverage _),
-    "q192_training_shards" -> (q192TrainingShards _),
-    "q139_pack_manifest" -> (q139PackManifest _),
-    "q138_bpe_packing"  -> (q138BpePacking _),
-    "q137_bpe_tokens"   -> (q137BpeTokens _),
-    "q109_vocab_encode" -> (q109VocabEncode _),
-    "q32_text_stats"   -> (q32TextStats _),
-    "q33_lang_id"      -> (q33LangId _),
-    "q34_token_counts" -> (q34TokenCounts _),
-    "q35_fingerprint"  -> (q35Fingerprint _))
-
-  val oracles: Map[String, String] = Map(
-    "q358_readability" -> q358Oracle,
-    "q334_boilerplate_phrases" -> q334Oracle,
-    "q335_cdc_chunking"      -> q335Oracle,
-    "q311_heaps_growth"      -> q311Oracle,
-    "q291_zipf_slope"        -> q291Oracle,
-    "q293_term_burstiness"   -> q293Oracle,
-    "q275_lang_fertility"    -> q275Oracle,
-    "q260_vocab_coverage"    -> q260Oracle,
-    "q254_bigram_predictor"  -> q254Oracle,
-    "q253_source_similarity" -> q253Oracle,
-    "q239_textrank_keywords" -> q239Oracle,
-    "q224_lexical_diversity" -> q224Oracle,
-    "q214_epoch_shuffle" -> q214Oracle,
-    "q195_tokenizer_coverage" -> q195Oracle,
-    "q192_training_shards" -> q192Oracle,
-    "q139_pack_manifest" -> q139Oracle,
-    "q138_bpe_packing"  -> q138Oracle,
-    "q137_bpe_tokens"   -> q137Oracle,
-    "q109_vocab_encode" -> q109Oracle,
-    "q32_text_stats"   -> q32Oracle,
-    "q33_lang_id"      -> q33Oracle,
-    "q34_token_counts" -> q34Oracle,
-    "q35_fingerprint"  -> q35Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q358_readability", q358Readability, q358Oracle),
+    QuerySpec("q334_boilerplate_phrases", q334BoilerplatePhrases, q334Oracle),
+    QuerySpec("q335_cdc_chunking", q335CdcChunking, q335Oracle),
+    QuerySpec("q311_heaps_growth", q311HeapsGrowth, q311Oracle),
+    QuerySpec("q291_zipf_slope", q291ZipfSlope, q291Oracle),
+    QuerySpec("q293_term_burstiness", q293TermBurstiness, q293Oracle),
+    QuerySpec("q275_lang_fertility", q275LangFertility, q275Oracle),
+    QuerySpec("q260_vocab_coverage", q260VocabCoverage, q260Oracle),
+    QuerySpec("q254_bigram_predictor", q254BigramPredictor, q254Oracle),
+    QuerySpec("q253_source_similarity", q253SourceSimilarity, q253Oracle),
+    QuerySpec("q239_textrank_keywords", q239TextrankKeywords, q239Oracle),
+    QuerySpec("q224_lexical_diversity", q224LexicalDiversity, q224Oracle),
+    QuerySpec("q214_epoch_shuffle", q214EpochShuffle, q214Oracle),
+    QuerySpec("q195_tokenizer_coverage", q195TokenizerCoverage, q195Oracle),
+    QuerySpec("q192_training_shards", q192TrainingShards, q192Oracle),
+    QuerySpec("q139_pack_manifest", q139PackManifest, q139Oracle),
+    QuerySpec("q138_bpe_packing", q138BpePacking, q138Oracle),
+    QuerySpec("q137_bpe_tokens", q137BpeTokens, q137Oracle),
+    QuerySpec("q109_vocab_encode", q109VocabEncode, q109Oracle),
+    QuerySpec("q32_text_stats", q32TextStats, q32Oracle),
+    QuerySpec("q33_lang_id", q33LangId, q33Oracle),
+    QuerySpec("q34_token_counts", q34TokenCounts, q34Oracle),
+    QuerySpec("q35_fingerprint", q35Fingerprint, q35Oracle))
 }

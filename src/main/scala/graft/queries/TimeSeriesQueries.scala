@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Time-series downsampling and seasonality over the event stream — the
   * monitoring tier of an analytics engine: raw events are unreadable at
@@ -1877,61 +1877,32 @@ object TimeSeriesQueries {
       |ORDER BY cv2_ppm, user_id
       |LIMIT 20""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q372_wavelet_energy" -> (q372WaveletEnergy _),
-    "q373_bot_regularity" -> (q373BotRegularity _),
-    "q348_activation_report" -> (q348ActivationReport _),
-    "q346_trace_sample"      -> (q346TraceSample _),
-    "q340_mad_scale"         -> (q340MadScale _),
-    "q337_late_event_audit"  -> (q337LateEventAudit _),
-    "q329_changepoint"       -> (q329Changepoint _),
-    "q332_twap"              -> (q332Twap _),
-    "q323_theil_sen"         -> (q323TheilSen _),
-    "q321_streak_histogram"  -> (q321StreakHistogram _),
-    "q312_mase_backtest"     -> (q312MaseBacktest _),
-    "q314_leadlag_xcorr"     -> (q314LeadLagXcorr _),
-    "q315_dau_mau"           -> (q315DauMauStickiness _),
-    "q303_peak_concurrency"  -> (q303PeakConcurrency _),
-    "q299_life_table"        -> (q299LifeTable _),
-    "q292_session_gap_sensitivity" -> (q292SessionGapSensitivity _),
-    "q283_trend_slope"       -> (q283TrendSlope _),
-    "q279_cohort_retention"  -> (q279CohortRetention _),
-    "q259_event_doublefire"  -> (q259EventDoubleFire _),
-    "q261_dau_mau"           -> (q261DauMau _),
-    "q256_bandit_replay"     -> (q256BanditReplay _),
-    "q244_hhi_mix"           -> (q244HhiMix _),
-    "q237_cusum_drift"       -> (q237CusumDrift _),
-    "q228_dispersion_index"  -> (q228DispersionIndex _),
-    "q223_calendar_gap_runs" -> (q223CalendarGapRuns _),
-    "q217_ohlc_bars"        -> (q217OhlcBars _),
-    "q221_seasonal_anomaly" -> (q221SeasonalAnomaly _))
-
-  val oracles: Map[String, String] = Map(
-    "q372_wavelet_energy" -> q372Oracle,
-    "q373_bot_regularity" -> q373Oracle,
-    "q348_activation_report" -> q348Oracle,
-    "q346_trace_sample"      -> q346Oracle,
-    "q340_mad_scale"         -> q340Oracle,
-    "q337_late_event_audit"  -> q337Oracle,
-    "q329_changepoint"       -> q329Oracle,
-    "q332_twap"              -> q332Oracle,
-    "q323_theil_sen"         -> q323Oracle,
-    "q321_streak_histogram"  -> q321Oracle,
-    "q312_mase_backtest"     -> q312Oracle,
-    "q314_leadlag_xcorr"     -> q314Oracle,
-    "q315_dau_mau"           -> q315Oracle,
-    "q303_peak_concurrency"  -> q303Oracle,
-    "q299_life_table"        -> q299Oracle,
-    "q292_session_gap_sensitivity" -> q292Oracle,
-    "q283_trend_slope"       -> q283Oracle,
-    "q279_cohort_retention"  -> q279Oracle,
-    "q259_event_doublefire"  -> q259Oracle,
-    "q261_dau_mau"           -> q261Oracle,
-    "q256_bandit_replay"     -> q256Oracle,
-    "q244_hhi_mix"           -> q244Oracle,
-    "q237_cusum_drift"       -> q237Oracle,
-    "q228_dispersion_index"  -> q228Oracle,
-    "q223_calendar_gap_runs" -> q223Oracle,
-    "q217_ohlc_bars"        -> q217Oracle,
-    "q221_seasonal_anomaly" -> q221Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q372_wavelet_energy", q372WaveletEnergy, q372Oracle),
+    QuerySpec("q373_bot_regularity", q373BotRegularity, q373Oracle),
+    QuerySpec("q348_activation_report", q348ActivationReport, q348Oracle),
+    QuerySpec("q346_trace_sample", q346TraceSample, q346Oracle),
+    QuerySpec("q340_mad_scale", q340MadScale, q340Oracle),
+    QuerySpec("q337_late_event_audit", q337LateEventAudit, q337Oracle),
+    QuerySpec("q329_changepoint", q329Changepoint, q329Oracle),
+    QuerySpec("q332_twap", q332Twap, q332Oracle),
+    QuerySpec("q323_theil_sen", q323TheilSen, q323Oracle),
+    QuerySpec("q321_streak_histogram", q321StreakHistogram, q321Oracle),
+    QuerySpec("q312_mase_backtest", q312MaseBacktest, q312Oracle),
+    QuerySpec("q314_leadlag_xcorr", q314LeadLagXcorr, q314Oracle),
+    QuerySpec("q315_dau_mau", q315DauMauStickiness, q315Oracle),
+    QuerySpec("q303_peak_concurrency", q303PeakConcurrency, q303Oracle),
+    QuerySpec("q299_life_table", q299LifeTable, q299Oracle),
+    QuerySpec("q292_session_gap_sensitivity", q292SessionGapSensitivity, q292Oracle),
+    QuerySpec("q283_trend_slope", q283TrendSlope, q283Oracle),
+    QuerySpec("q279_cohort_retention", q279CohortRetention, q279Oracle),
+    QuerySpec("q259_event_doublefire", q259EventDoubleFire, q259Oracle),
+    QuerySpec("q261_dau_mau", q261DauMau, q261Oracle),
+    QuerySpec("q256_bandit_replay", q256BanditReplay, q256Oracle),
+    QuerySpec("q244_hhi_mix", q244HhiMix, q244Oracle),
+    QuerySpec("q237_cusum_drift", q237CusumDrift, q237Oracle),
+    QuerySpec("q228_dispersion_index", q228DispersionIndex, q228Oracle),
+    QuerySpec("q223_calendar_gap_runs", q223CalendarGapRuns, q223Oracle),
+    QuerySpec("q217_ohlc_bars", q217OhlcBars, q217Oracle),
+    QuerySpec("q221_seasonal_anomaly", q221SeasonalAnomaly, q221Oracle))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Tier-B window functions and top-k (SURVEY.md §2.B B10–B11).
   *
@@ -211,21 +211,12 @@ object Windows {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
       |ORDER BY user_id, ts, event_id""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q97_window_range_frame" -> (q97WindowRangeFrame _),
-    "q100_window_navigation" -> (q100WindowNavigation _),
-    "q14_window_rank"    -> (q14WindowRank _),
-    "q15_window_lag"     -> (q15WindowLag _),
-    "q16_window_running" -> (q16WindowRunning _),
-    "q17_topk_global"    -> (q17TopKGlobal _),
-    "q18_topk_pergroup"  -> (q18TopKPerGroup _))
-
-  val oracles: Map[String, String] = Map(
-    "q97_window_range_frame" -> q97Oracle,
-    "q100_window_navigation" -> q100Oracle,
-    "q14_window_rank"    -> q14Oracle,
-    "q15_window_lag"     -> q15Oracle,
-    "q16_window_running" -> q16Oracle,
-    "q17_topk_global"    -> q17Oracle,
-    "q18_topk_pergroup"  -> q18Oracle)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q97_window_range_frame", q97WindowRangeFrame, q97Oracle),
+    QuerySpec("q100_window_navigation", q100WindowNavigation, q100Oracle),
+    QuerySpec("q14_window_rank", q14WindowRank, q14Oracle),
+    QuerySpec("q15_window_lag", q15WindowLag, q15Oracle),
+    QuerySpec("q16_window_running", q16WindowRunning, q16Oracle),
+    QuerySpec("q17_topk_global", q17TopKGlobal, q17Oracle),
+    QuerySpec("q18_topk_pergroup", q18TopKPerGroup, q18Oracle))
 }

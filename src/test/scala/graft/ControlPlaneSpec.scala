@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.{ColumnMapping, Credentials, SourceType, TargetSchema}
+import graft.model.{ColumnMapping, Credentials, MappingRegistry, SourceType, TargetSchema}
 import graft.pipeline.JobRunner
 import graft.pipeline.JobRunner.{ConnectorRecord, EncryptedCreds}
 import graft.sources.JdbcTableSource
@@ -53,11 +53,19 @@ class ControlPlaneSpec extends AnyFunSuite with SparkSpec {
     st.close()
   }
 
+  private val orderMapping = TargetSchema(Seq(
+    ColumnMapping("order_id", "oid", "string"),
+    ColumnMapping("amount_f", "amount", "float")))
+
   test("flagship flow: decrypt -> probe -> catalog -> fetch -> map -> upsert") {
     schemaReady
-    val mapping = TargetSchema(Seq(
-      ColumnMapping("order_id", "oid", "string"),
-      ColumnMapping("amount_f", "amount", "float")))
+    // the reference loads connector id -> mapping from a registry table;
+    // here the same document comes as JSON through MappingRegistry
+    val mappings = MappingRegistry.parse(
+      """{"conn-1": {"columns": [
+        |  {"name": "order_id", "source": "oid", "type": "string"},
+        |  {"name": "amount_f", "source": "amount", "type": "float"}]}}""".stripMargin)
+    assert(mappings === Map("conn-1" -> orderMapping))
     val cfg = graft.model.JdbcConfig(jdbcUrl, "app", "s3cr3t!",
       "org.apache.derby.jdbc.EmbeddedDriver")
     val report = JobRunner.run(
@@ -66,7 +74,7 @@ class ControlPlaneSpec extends AnyFunSuite with SparkSpec {
       connectionId = "conn-1",
       table = Some("SRC_ORDERS"),
       keyHex = keyHex,
-      mappings = Map("conn-1" -> mapping),
+      mappings = mappings,
       store = new JdbcStore(cfg, "tgt_orders", "order_id",
         stagingColumnTypes = Some("order_id VARCHAR(16)")))
     assert(report.sourceType === SourceType.Derby)
@@ -78,9 +86,6 @@ class ControlPlaneSpec extends AnyFunSuite with SparkSpec {
 
   test("flagship flow is idempotent on re-run (staged upsert semantics)") {
     schemaReady
-    val mapping = TargetSchema(Seq(
-      ColumnMapping("order_id", "oid", "string"),
-      ColumnMapping("amount_f", "amount", "float")))
     val cfg = graft.model.JdbcConfig(jdbcUrl, "app", "s3cr3t!",
       "org.apache.derby.jdbc.EmbeddedDriver")
     JobRunner.run(
@@ -89,11 +94,22 @@ class ControlPlaneSpec extends AnyFunSuite with SparkSpec {
       connectionId = "conn-1",
       table = Some("SRC_ORDERS"),
       keyHex = keyHex,
-      mappings = Map("conn-1" -> mapping),
+      mappings = Map("conn-1" -> orderMapping),
       store = new JdbcStore(cfg, "tgt_orders", "order_id",
         stagingColumnTypes = Some("order_id VARCHAR(16)")))
     val n = JdbcTableSource(cfg, "tgt_orders").fetch(spark).count()
     assert(n === 3, "same keys upserted twice must not duplicate")
+  }
+
+  test("mapping registry rejects non-array columns and a column without a source") {
+    intercept[IllegalArgumentException] {
+      MappingRegistry.parse("""{"conn-1": {"columns": {"name": "order_id"}}}""")
+    }
+    val ex = intercept[IllegalArgumentException] {
+      MappingRegistry.parse(
+        """{"conn-1": {"columns": [{"name": "order_id", "type": "string"}]}}""")
+    }
+    assert(ex.getMessage.contains("'source'"))
   }
 
   test("unknown connector id fails loudly") {

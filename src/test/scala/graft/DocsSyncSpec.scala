@@ -19,8 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    documented contract);
   *  - README's stated query count must equal `SparkEntry.queries.size` and
   *    its stated id range must end at the actual max id;
-  *  - every `oracleSql` key must be a registry key (an oracle with no query
-  *    can never be exercised — it would silently rot).
+  *  - every registered name must be distinct: `queries` and `oracleSql`
+  *    are maps built from `SparkEntry.specs`, so a second spec with the
+  *    same name would silently replace the first. (Each spec carries its
+  *    own oracle, so a query without an oracle, or an oracle without a
+  *    query, cannot be written.)
   *
   * The spec reads the repo files relative to the working directory, which
   * is the repo root under sbt — the same convention BenchGateSpec uses for
@@ -70,22 +73,12 @@ class DocsSyncSpec extends AnyFunSuite {
       s"README says range ends at q$statedMax; registry max is q$actualMax")
   }
 
-  test("every oracleSql key has a registry query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty,
-      s"oracleSql entries with no registry query: ${orphans.mkString(", ")}")
-  }
-
-  test("every registry query has an oracle (no silent rows-only gates)") {
-    // since q74's round-11 retirement the whole registry is exact-oracle
-    // gated; a query registered without its oracleSql entry silently
-    // downgrades to the driver's rows-only check — exactly how q341
-    // almost shipped in round 13. Keep this list EMPTY.
-    val allowedRowsOnly = Set.empty[String]
-    val missing =
-      SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- allowedRowsOnly
-    assert(missing.isEmpty,
-      s"registry queries with no oracle: ${missing.toSeq.sorted.mkString(", ")}")
+  test("every registered query name is distinct") {
+    val dups = SparkEntry.specs.groupBy(_.name).collect {
+      case (name, specs) if specs.size > 1 => name
+    }
+    assert(dups.isEmpty,
+      s"names registered more than once: ${dups.toSeq.sorted.mkString(", ")}")
   }
 
   test("near-dup cascade consumers stay within the round-14 frozen " +

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class QueriesSpec extends AnyFunSuite with SparkSpec {
@@ -8,9 +10,20 @@ class QueriesSpec extends AnyFunSuite with SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a registered query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql keys without queries: $missing")
+  test("Verify records a failing query in verify_failures.json and goes on") {
+    val only = Some("^q01_agg_pricing$".r)
+    def failures(out: Path): String = Files.readString(out.resolve("verify_failures.json"))
+    val bad = Files.createTempDirectory("graft-verify-bad")
+    Verify.dump(spark, s"$bad/no_such_sf", bad.toString, only)
+    assert(failures(bad).matches(
+      """\{"q01_agg_pricing": "[\w.$]+Exception: .+"\}"""), failures(bad))
+    // the oracle file is still written for the selected query
+    assert(Files.readString(bad.resolve("oracle_sql.json"))
+      .startsWith("{\"q01_agg_pricing\": "))
+    val good = Files.createTempDirectory("graft-verify-good")
+    Verify.dump(spark, sfDir, good.toString, only)
+    assert(failures(good) === "{}")
+    assert(Files.isDirectory(good.resolve("q01_agg_pricing")))
   }
 
   test("all registered queries execute and return rows at sf0.001") {

@@ -7,20 +7,12 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTest {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // tz-naive testdata timestamps must read as TIMESTAMP, not NTZ
-      // (same setting as SparkSessionFactory)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val s = SparkSessionFactory.build(
+      appName = "graft-test",
+      master = "local[4]",
       // static conf: needed by the bucketing spec's saveAsTable
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+      configOptions = Map("spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
     s.sparkContext.setLogLevel("WARN")
     s
   }
